@@ -183,20 +183,3 @@ def candidate_tokens_col(
             id_type == "uniprot_entry_name", uniprot_entry_candidates(value)
         )
     return chain.otherwise(other_candidates(value, include_heuristics))
-
-
-def typed_candidates(c: Column, id_type: str) -> Column:
-    """Dispatch by configured column id_type (resolve_row's
-    _candidate_values, gene_id_utils.py:525-539): defline columns use
-    their typed extractor; everything else expands via expand_list
-    and appends heuristic variants per candidate (pass-2 semantics),
-    typed 'other'."""
-    if id_type == "ncbi_protein_defline":
-        return ncbi_defline_tokens(c)
-    if id_type == "uniprot_defline":
-        return uniprot_defline_tokens(c)
-    if id_type == "uniprot_annotation_string":
-        return uniprot_annotation_tokens(c)
-    if id_type == "uniprot_entry_name":
-        return uniprot_entry_candidates(c)
-    return other_candidates(c)

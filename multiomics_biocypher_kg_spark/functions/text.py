@@ -223,9 +223,3 @@ def extract_text_native(html: Column) -> Column:
     un = F.regexp_replace(un, "&#39;", "'")
     un = F.regexp_replace(un, "&amp;", "&")  # must be last (inverse of escape)
     return un
-
-
-def clean_text_col(c: Column) -> Column:
-    """Reference clean_text: single-pass translate of '|'->',' and
-    "'"->'^' (/root/reference/multiomics_kg/utils/curie_utils.py:38-53)."""
-    return F.translate(c, "|'", ",^")

@@ -158,27 +158,6 @@ def merge_into_sql_stmt(
     )
 
 
-def merge_into_catalog(
-    spark: SparkSession,
-    table: str,
-    updates: DataFrame,
-    keys: list[str],
-    accrete: list[str] | None = None,
-) -> None:
-    """Run the real MERGE INTO against a catalog table (Iceberg/Delta)
-    — the deployment twin of :func:`merge_into`. On Iceberg the
-    statement is one atomic metadata commit; partition pruning on the
-    keys bounds the rewritten files."""
-    updates = updates.dropDuplicates(keys)
-    view = f"_merge_updates_{uuid.uuid4().hex[:8]}"
-    updates.createOrReplaceTempView(view)
-    try:
-        value_cols = [c for c in updates.columns if c not in keys]
-        spark.sql(merge_into_sql_stmt(table, view, keys, value_cols, accrete))
-    finally:
-        spark.catalog.dropTempView(view)
-
-
 def accrete_evidence(arms: list[tuple[str, DataFrame]], keys: list[str]) -> DataFrame:
     """One-shot batch equivalent of folding ``merge_into(...,
     accrete=['evidence_sources'])`` over evidence arms IN ORDER

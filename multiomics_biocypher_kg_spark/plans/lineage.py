@@ -8,57 +8,73 @@ and its Schema_info build-stamp node
 (/root/reference/scripts/post-import.cypher:1361-1375) with:
 
 - ``lineage_rows``: one row per (stage, spark partition) with row
-  count and an order-insensitive content checksum (xor-ish via sum
-  of row hashes — computable distributed, no collect),
+  count and an order-insensitive content checksum (the sum of row
+  hashes mod 2^63, computable distributed, no collect),
 - ``StagedRunner``: runs the DAG stage by stage; each stage writes a
   parquet stage table + its lineage; a re-run with an existing,
-  checksum-matching stage table is a no-op (resume), and stage
-  writes go through merge_into (anti-join + union + atomic swap —
-  the MERGE INTO emulation; on Iceberg this is the real statement).
+  checksum-matching stage table whose upstream stages still hold the
+  content it was built from is a no-op (resume); any other run
+  replaces the stage table with a full build written through
+  merge_into (dedup on the stage keys + atomic swap — the MERGE INTO
+  emulation; on Iceberg this is the real statement).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+from collections.abc import Callable, Sequence
+from decimal import Decimal
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from multiomics_biocypher_kg_spark.operators.materialize import merge_into
 
+CHECKSUM_MOD = 2**63
+# A sum of at most 2^63 terms, each below 2^63, stays below 2^126 < 10^38.
+_WIDE = "decimal(38,0)"
+
+
+def modsum(terms: Column) -> Column:
+    """Aggregate: the sum of non-negative long ``terms`` mod 2^63, as
+    a long. The sum runs in decimal(38,0), which holds any sum Spark
+    can count, so no intermediate overflows, with ANSI mode on or off.
+    """
+    return F.pmod(
+        F.sum(terms.cast(_WIDE)), F.lit(Decimal(CHECKSUM_MOD)).cast(_WIDE)
+    ).cast("long")
+
+
+def _row_term(df: DataFrame) -> Column:
+    """A row's checksum term: pmod(xxhash64(all columns), 2^31)."""
+    return F.pmod(F.xxhash64(*df.columns), F.lit(2**31))
+
 
 def content_checksum(df: DataFrame) -> tuple[int, int]:
-    """Order-insensitive content checksum + row count in ONE job:
-    sum of pmod(xxhash64(all columns), 2^31) reduced pmod 2^63 —
-    unsigned at every step, so the value is stable across engines
-    and re-partitionings (pure aggregation, no data to the driver).
+    """Order-insensitive content checksum + row count in ONE job: the
+    sum of every row's term mod 2^63 (see ``modsum``), so the value is
+    stable across engines and re-partitionings (pure aggregation, no
+    data to the driver).
 
     -> (checksum, n_rows)
     """
-    row = (
-        df.select(F.xxhash64(*df.columns).alias("h"))
-        .agg(
-            F.sum(F.pmod(F.col("h"), F.lit(2**31))).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()[0]
-    )
-    return int((row.s or 0) % (2**63)), int(row.n)
+    row = df.agg(
+        modsum(_row_term(df)).alias("s"), F.count(F.lit(1)).alias("n")
+    ).collect()[0]
+    return int(row.s or 0), int(row.n)
 
 
 def lineage_rows(df: DataFrame, stage: str) -> DataFrame:
     """Per-spark-partition lineage: (stage, partition_id, n_rows,
-    checksum) — the 'source split' accounting of the north rule."""
+    checksum) — the 'source split' accounting of the north rule. The
+    partition checksums sum, mod 2^63, to ``content_checksum``."""
     return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .withColumn("_h", F.xxhash64(*[c for c in df.columns]))
+        df.select(F.spark_partition_id().alias("_pid"), _row_term(df).alias("_t"))
         .groupBy("_pid")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.pmod(F.col("_h"), F.lit(2**31))).alias("checksum"),
-        )
+        .agg(F.count(F.lit(1)).alias("n_rows"), modsum(F.col("_t")).alias("checksum"))
         .select(
             F.lit(stage).alias("stage"),
             F.col("_pid").alias("partition_id"),
@@ -85,20 +101,28 @@ class StagedRunner:
         return os.path.join(d, "data"), os.path.join(d, "lineage.json")
 
     def is_complete(self, stage: str) -> bool:
-        """A stage is complete only when its data AND lineage exist
-        AND the recorded checksum matches a recompute over the stage
-        table — a half-written or tampered table re-runs instead of
-        resuming (the 'checksum-matching stage table is a no-op'
-        contract). Costs one aggregation job per resumed stage."""
+        """A stage is complete only when its data AND lineage exist,
+        every upstream stage still records the checksum this stage was
+        built from, AND the recorded checksum matches a recompute over
+        the stage table — a half-written or tampered table, or one
+        built from a since-rebuilt upstream, re-runs instead of
+        resuming. The upstream comparison reads lineage.json files
+        only; the recompute costs one aggregation job per resumed
+        stage."""
         data, lin = self._paths(stage)
         if not (os.path.isdir(data) and os.path.isfile(lin)):
             return False
         try:
             recorded = self.lineage(stage)
-        except (OSError, ValueError):
-            # torn/corrupt lineage.json (crash mid-write) -> rebuild,
-            # never raise: the documented 'half-written stage re-runs'
-            # contract
+            if any(
+                self.lineage(up)["checksum"] != checksum
+                for up, checksum in recorded.get("upstream", {}).items()
+            ):
+                return False
+        except (OSError, ValueError, KeyError):
+            # torn/corrupt lineage.json (crash mid-write) or a missing
+            # upstream -> rebuild, never raise: the documented
+            # 'half-written stage re-runs' contract
             return False
         checksum, n = content_checksum(self.spark.read.parquet(data))
         return checksum == recorded.get("checksum") and n == recorded.get("n_rows")
@@ -106,23 +130,33 @@ class StagedRunner:
     def run_stage(
         self,
         stage: str,
-        build: "callable[[], DataFrame]",
+        build: Callable[[], DataFrame],
         keys: list[str],
         force: bool = False,
+        upstream: Sequence[str] = (),
     ) -> DataFrame:
-        """Run (or resume) one stage. If the stage table exists with a
-        recorded lineage, the build is skipped entirely (resume); else
-        the DataFrame is upserted via merge_into on ``keys`` —
-        re-running a crashed half-written stage converges to the same
-        table (idempotence)."""
+        """Run (or resume) one stage. If the stage is complete (see
+        ``is_complete``), the build is skipped entirely (resume); else
+        ``build`` returns the stage's whole content, which replaces
+        any previous table via merge_into on ``keys`` (dedup on the
+        keys + atomic swap) — no row of an earlier build survives, so
+        re-running a crashed, tampered or invalidated stage converges
+        to the same table (idempotence). The checksums of the
+        ``upstream`` stages are recorded with the stage's lineage, so
+        rebuilding one of them with new content invalidates this
+        stage."""
         data, lin = self._paths(stage)
         if self.is_complete(stage) and not force:
             return self.spark.read.parquet(data)
+        upstream_checksums = {up: self.lineage(up)["checksum"] for up in upstream}
         df = build()
+        # a rebuild is a full build: merging onto the stale table would
+        # keep its rows whose keys the new build no longer produces
+        shutil.rmtree(data, ignore_errors=True)
         os.makedirs(os.path.dirname(data), exist_ok=True)
         merge_into(self.spark, data, df, keys)
         out = self.spark.read.parquet(data)
-        checksum, n = content_checksum(out)
+        # one scan: the stage totals are the partition rows' sums
         per_part = [r.asDict() for r in lineage_rows(out, stage).collect()]
         # write-then-rename: lineage.json appears atomically, so a
         # crash mid-dump leaves no torn file behind
@@ -131,8 +165,9 @@ class StagedRunner:
             json.dump(
                 {
                     "stage": stage,
-                    "n_rows": n,
-                    "checksum": checksum,
+                    "n_rows": sum(p["n_rows"] for p in per_part),
+                    "checksum": sum(p["checksum"] for p in per_part) % CHECKSUM_MOD,
+                    "upstream": upstream_checksums,
                     "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                     "partitions": per_part,
                 },

@@ -1,11 +1,20 @@
-"""End-to-end KG-construction DAG.
+"""End-to-end KG-construction DAG, defined once as ``STAGES``.
 
 extract -> mention -> link -> canonicalize -> materialize -> enrich
-(SURVEY.md §7.1). Every stage is a pure DataFrame transform; the
-returned dict is lazy — callers decide what to materialize (tests
-collect tiny slices; ``run_staged`` persists each stage as a
-partitioned parquet stage table with a lineage row, the
-Iceberg-layout stand-in).
+(SURVEY.md §7.1). ``STAGES`` lists the stage tables in run order;
+each ``Stage`` names its upstream stages, a pure DataFrame build over
+the build's ``Sources`` and the upstream frames, and the merge keys
+of its table (mention is a step inside the link stage, not a table).
+Every entry point of the DAG walks this one list:
+
+- ``run_staged`` persists each stage as a partitioned parquet stage
+  table with lineage (the Iceberg-layout stand-in). Each build reads
+  the tables its upstream stages just wrote or resumed, so no plan
+  runs twice, and a resumed stage builds nothing (a resumed
+  canonicalize runs no connected-components loop).
+- ``compose`` chains the builds lazily: ``build_graph`` returns the
+  whole DAG, ``registry._pipeline`` and the streaming ingest take the
+  prefix through ``link``. Callers decide what to materialize.
 
 Same-as evidence: in the real corpus this comes from shared-ID /
 co-mention evidence; for the deterministic driver corpus
@@ -15,6 +24,10 @@ FIXTURES.md A3.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,70 +67,141 @@ def sameas_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stars.union(bridges).where(F.col("id_a") != F.col("id_b"))
 
 
-def build_graph(
-    spark: SparkSession, sf_dir: str, cc_checkpoint: str = "local"
-) -> dict[str, DataFrame]:
-    """Run the full DAG over the driver corpus; returns lazy stages.
+class Sources:
+    """The build's inputs, each made on first use, so a prefix of the
+    DAG or a resumed build touches only what it needs. ``pages``
+    overrides the corpus read (the streaming ingest passes its
+    micro-batch pages).
 
     ``cc_checkpoint='reliable'`` makes the connected-components loop
     checkpoint to the durable dir set via setCheckpointDir — the
     multi-executor setting where a lost executor must not kill the
     lineage-truncated run."""
-    pages = pages_from_documents(spark, sf_dir)
-    vocab = vocab_df(spark)
-    docs = extract(pages)
-    mentions = mentions_tokens(docs, vocab)
-    links = link(mentions, vocab)
-    sameas = sameas_from_documents(spark, sf_dir)
-    mapping = canonical_mapping(sameas, checkpoint=cc_checkpoint)
 
+    def __init__(
+        self,
+        spark: SparkSession,
+        sf_dir: str | None = None,
+        cc_checkpoint: str = "local",
+        pages: DataFrame | None = None,
+    ):
+        self.spark = spark
+        self.sf_dir = sf_dir
+        self.cc_checkpoint = cc_checkpoint
+        if pages is not None:
+            self.pages = pages
+
+    @cached_property
+    def pages(self) -> DataFrame:
+        return pages_from_documents(self.spark, self.sf_dir)
+
+    @cached_property
+    def vocab(self) -> DataFrame:
+        return vocab_df(self.spark)
+
+    @cached_property
+    def sameas(self) -> DataFrame:
+        return sameas_from_documents(self.spark, self.sf_dir)
+
+
+def _link(src: Sources, docs: DataFrame) -> DataFrame:
+    return link(mentions_tokens(docs, src.vocab), src.vocab)
+
+
+def _canonicalize(src: Sources) -> DataFrame:
+    return canonical_mapping(src.sameas, checkpoint=src.cc_checkpoint)
+
+
+def _materialize(src: Sources, links: DataFrame, mapping: DataFrame) -> DataFrame:
     mention_triples = triples_from_links(links, subj_col="url")
-    same_triples = sameas_triples(mapping)
-    triples = with_edge_id(mention_triples.unionByName(same_triples))
+    return with_edge_id(mention_triples.unionByName(sameas_triples(mapping)))
 
-    rollups = entity_rollups(links)
-    ranked = rank_percentile_bucket(
-        rollups.withColumn("vocab_group", F.split("entity_id", ":")[0]),
+
+def _enrich(src: Sources, links: DataFrame) -> DataFrame:
+    return rank_percentile_bucket(
+        entity_rollups(links).withColumn("vocab_group", F.split("entity_id", ":")[0]),
         ["vocab_group"],
         "mention_count",
         "entity_id",
     )
+
+
+@dataclass(frozen=True)
+class Stage:
+    name: str  # stage table name under the staged workdir
+    output: str  # key of the stage's frame in build_graph / run_staged
+    upstream: tuple[str, ...]
+    build: Callable[..., DataFrame]  # (sources, *upstream frames) -> frame
+    keys: tuple[str, ...]  # merge keys of the stage table
+
+
+STAGES = (
+    Stage("extract", "docs", (), lambda src: extract(src.pages), ("url",)),
+    Stage("link", "links", ("extract",), _link, ("url", "pos")),
+    Stage("canonicalize", "mapping", (), _canonicalize, ("entity_id",)),
+    Stage("materialize", "triples", ("link", "canonicalize"), _materialize, ("edge_id",)),
+    Stage("enrich", "entity_nodes", ("link",), _enrich, ("entity_id",)),
+)
+
+
+def _walk(
+    src: Sources,
+    run: Callable[[Stage, Callable[[], DataFrame]], DataFrame],
+    upto: str | None = None,
+) -> dict[str, DataFrame]:
+    """Feed each stage its upstream frames as ``run`` returned them;
+    ``run(stage, thunk)`` yields the stage's frame from its build."""
+    frames: dict[str, DataFrame] = {}
+    for stage in STAGES:
+        ups = [frames[u] for u in stage.upstream]
+        frames[stage.name] = run(stage, lambda s=stage, u=ups: s.build(src, *u))
+        if stage.name == upto:
+            break
+    return frames
+
+
+def compose(src: Sources, upto: str | None = None) -> dict[str, DataFrame]:
+    """The stages through ``upto`` (all by default) as lazy frames,
+    keyed by stage name."""
+    return _walk(src, lambda stage, thunk: thunk(), upto)
+
+
+def build_graph(
+    spark: SparkSession, sf_dir: str, cc_checkpoint: str = "local"
+) -> dict[str, DataFrame]:
+    """Run the full DAG over the driver corpus; returns lazy stages
+    plus the inputs and side views between them."""
+    src = Sources(spark, sf_dir, cc_checkpoint)
+    frames = compose(src)
+    out = {stage.output: frames[stage.name] for stage in STAGES}
     return {
-        "pages": pages,
-        "docs": docs,
-        "mentions": mentions,
-        "links": links,
-        "link_histogram": resolution_histogram(links),
-        "sameas": sameas,
-        "mapping": mapping,
-        "triples": triples,
-        "entity_nodes": ranked,
+        "pages": src.pages,
+        "docs": out["docs"],
+        "mentions": mentions_tokens(out["docs"], src.vocab),
+        "links": out["links"],
+        "link_histogram": resolution_histogram(out["links"]),
+        "sameas": src.sameas,
+        "mapping": out["mapping"],
+        "triples": out["triples"],
+        "entity_nodes": out["entity_nodes"],
     }
 
 
 def run_staged(
     spark: SparkSession, sf_dir: str, workdir: str, cc_checkpoint: str = "local"
-) -> dict[str, "DataFrame"]:
+) -> dict[str, DataFrame]:
     """The DAG as idempotent, resumable stage tables (north rule):
-    each stage = one parquet stage table + lineage row; re-running
-    skips completed stages; a crashed half-write converges via the
-    MERGE INTO emulation (see plans.lineage.StagedRunner)."""
+    each stage = one parquet stage table + lineage row, built from its
+    upstream stage tables; re-running skips completed stages; a
+    crashed half-write converges via the MERGE INTO emulation (see
+    plans.lineage.StagedRunner)."""
     from multiomics_biocypher_kg_spark.plans.lineage import StagedRunner
 
     runner = StagedRunner(spark, workdir)
-    stages = build_graph(spark, sf_dir, cc_checkpoint=cc_checkpoint)
-    out: dict[str, DataFrame] = {}
-    out["docs"] = runner.run_stage("extract", lambda: stages["docs"], ["url"])
-    out["links"] = runner.run_stage(
-        "link", lambda: stages["links"], ["url", "pos"]
+    tables = _walk(
+        Sources(spark, sf_dir, cc_checkpoint),
+        lambda stage, thunk: runner.run_stage(
+            stage.name, thunk, list(stage.keys), upstream=stage.upstream
+        ),
     )
-    out["mapping"] = runner.run_stage(
-        "canonicalize", lambda: stages["mapping"], ["entity_id"]
-    )
-    out["triples"] = runner.run_stage(
-        "materialize", lambda: stages["triples"], ["edge_id"]
-    )
-    out["entity_nodes"] = runner.run_stage(
-        "enrich", lambda: stages["entity_nodes"], ["entity_id"]
-    )
-    return out
+    return {stage.output: tables[stage.name] for stage in STAGES}

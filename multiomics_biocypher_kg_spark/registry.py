@@ -30,8 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from multiomics_biocypher_kg_spark.operators.canonicalize import connected_components
-from multiomics_biocypher_kg_spark.operators.extract import extract
-from multiomics_biocypher_kg_spark.operators.link import link, resolution_histogram
+from multiomics_biocypher_kg_spark.operators.link import resolution_histogram
 from multiomics_biocypher_kg_spark.operators.mention import mentions_tokens
 from multiomics_biocypher_kg_spark.operators.materialize import (
     sameas_triples,
@@ -43,8 +42,11 @@ from multiomics_biocypher_kg_spark.operators.enrich import (
     entity_rollups,
     rank_percentile_bucket,
 )
-from multiomics_biocypher_kg_spark.plans.pipeline import sameas_from_documents
-from multiomics_biocypher_kg_spark.sources.pages import pages_from_documents
+from multiomics_biocypher_kg_spark.plans.pipeline import (
+    Sources,
+    compose,
+    sameas_from_documents,
+)
 from multiomics_biocypher_kg_spark.sources.vocab import vocab_df, vocab_values_sql
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -90,11 +92,9 @@ from multiomics_biocypher_kg_spark.oracle_fragments import (  # noqa: F401
 
 
 def _pipeline(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    pages = pages_from_documents(spark, sf_dir)
-    vocab = vocab_df(spark)
-    docs = extract(pages)
-    links = link(mentions_tokens(docs, vocab), vocab)
-    return {"pages": pages, "docs": docs, "links": links}
+    src = Sources(spark, sf_dir)
+    frames = compose(src, upto="link")
+    return {"pages": src.pages, "docs": frames["extract"], "links": frames["link"]}
 
 
 # --------------------------------------------------------------------------

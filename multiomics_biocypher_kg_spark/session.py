@@ -56,9 +56,11 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # binary-heavy corpora (40-100 KB html per row): batch sizes are
-        # rows, not bytes — 4096-row default batches x 32 concurrent
-        # tasks x ~50 KB/row OOMs the heap. 1024 keeps peak scan memory
-        # ~1.5 GB at 32 threads while staying vectorized.
+        # rows, not bytes. Arrow batches to Python workers hold 4096
+        # rows (Spark's default is 10000). The parquet reader's
+        # 4096-row default batches x 32 concurrent tasks x ~50 KB/row
+        # OOM the heap; its 1024 keeps peak scan memory ~1.5 GB at 32
+        # threads while staying vectorized.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.execution.arrow.useLargeVarTypes", "true")
         .config("spark.sql.parquet.columnarReaderBatchSize", "1024")

@@ -1,10 +1,11 @@
 """Streaming KG ingestion: the crawl keeps arriving.
 
 ``readStream`` over a documents directory flows through the SAME
-pure transforms as the batch pipeline (pages synth -> extract ->
-mention -> link are all stateless column programs, so they compose
-with a streaming frame unchanged); the sink is ``foreachBatch`` into
-the MERGE INTO emulation keyed by edge_id — so a re-delivered or
+stage builds as the batch pipeline (``plans.pipeline.compose``
+through link: pages synth -> extract -> mention -> link are all
+stateless column programs, so they compose with a streaming frame
+unchanged); the sink is ``foreachBatch`` into the MERGE INTO
+emulation keyed by edge_id — so a re-delivered or
 retried micro-batch upserts the same deterministic edge ids and the
 triple table converges exactly-once in content terms (the same
 resume primitive the batch StagedRunner uses; on Iceberg this is a
@@ -33,20 +34,17 @@ def streaming_triples_query(
 ):
     """Build (not start) the streaming query: documents dir ->
     mention triples upserted into ``target_path``."""
-    from multiomics_biocypher_kg_spark.operators.extract import extract
-    from multiomics_biocypher_kg_spark.operators.link import link
     from multiomics_biocypher_kg_spark.operators.materialize import (
         merge_into,
         triples_from_links,
         with_edge_id,
     )
-    from multiomics_biocypher_kg_spark.operators.mention import mentions_tokens
+    from multiomics_biocypher_kg_spark.plans.pipeline import Sources, compose
     from multiomics_biocypher_kg_spark.sources.pages import pages_from_documents_df
-    from multiomics_biocypher_kg_spark.sources.vocab import vocab_df
 
-    vocab = vocab_df(spark)
     docs = spark.readStream.schema(docs_schema).parquet(docs_dir)
-    links = link(mentions_tokens(extract(pages_from_documents_df(docs)), vocab), vocab)
+    src = Sources(spark, pages=pages_from_documents_df(docs))
+    links = compose(src, upto="link")["link"]
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         triples = with_edge_id(triples_from_links(batch_df, subj_col="url"))

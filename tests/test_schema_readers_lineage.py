@@ -253,3 +253,136 @@ def test_staged_pipeline_end_to_end_resume(spark, tmp_path):
     with open(os.path.join(str(tmp_path), "materialize", "lineage.json")) as f:
         lin = json.load(f)
     assert lin["n_rows"] == n1 and lin["partitions"]
+
+
+def test_modsum_has_no_overflowing_intermediate(spark):
+    """Terms near the long limit: a plain long sum of them overflows
+    (ARITHMETIC_OVERFLOW under ANSI), the checksum reduction does not
+    and returns the exact sum mod 2^63, overall and per group."""
+    from multiomics_biocypher_kg_spark.plans.lineage import CHECKSUM_MOD, modsum
+
+    big = [2**63 - 1, 2**63 - 1, 2**62, 2**31 - 1, 5]
+    terms = spark.createDataFrame(
+        [(i % 2, v) for i, v in enumerate(big)], "g int, t long"
+    ).repartition(2)
+    if spark.conf.get("spark.sql.ansi.enabled") == "true":
+        with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+            terms.agg(F.sum("t")).collect()
+    got = terms.agg(modsum(F.col("t")).alias("s")).collect()[0].s
+    assert got == sum(big) % CHECKSUM_MOD
+    per_group = {
+        r.g: r.s for r in terms.groupBy("g").agg(modsum(F.col("t")).alias("s")).collect()
+    }
+    assert per_group == {
+        g: sum(v for i, v in enumerate(big) if i % 2 == g) % CHECKSUM_MOD for g in (0, 1)
+    }
+
+
+def test_checksum_value_unchanged_and_partition_rows_sum_to_it(spark):
+    """content_checksum keeps the long-sum value wherever that sum does
+    not overflow, and the per-partition lineage rows add up to it."""
+    from multiomics_biocypher_kg_spark.plans.lineage import (
+        CHECKSUM_MOD,
+        content_checksum,
+        lineage_rows,
+    )
+
+    df = spark.range(5000).select(
+        (F.col("id") * 7).alias("a"), F.col("id").cast("string").alias("b")
+    )
+    long_sum = (
+        df.select(F.pmod(F.xxhash64("a", "b"), F.lit(2**31)).alias("t"))
+        .agg(F.sum("t"))
+        .collect()[0][0]
+    )
+    assert content_checksum(df) == (long_sum % CHECKSUM_MOD, 5000)
+    parts = lineage_rows(df.repartition(3), "s").collect()
+    assert len(parts) == 3
+    assert (
+        sum(p.checksum for p in parts) % CHECKSUM_MOD,
+        sum(p.n_rows for p in parts),
+    ) == content_checksum(df)
+
+
+def test_staged_tables_match_build_graph(spark, tmp_path):
+    """Chaining the stages through their own tables (merge_into dedups
+    each upstream on its keys) leaves every table's content equal to
+    the lazy build_graph frame it stands for."""
+    from multiomics_biocypher_kg_spark.plans.lineage import content_checksum
+    from multiomics_biocypher_kg_spark.plans.pipeline import build_graph, run_staged
+
+    staged = run_staged(spark, SF_TINY, str(tmp_path))
+    lazy = build_graph(spark, SF_TINY)
+    assert sorted(staged) == ["docs", "entity_nodes", "links", "mapping", "triples"]
+    for key, table in staged.items():
+        assert content_checksum(table) == content_checksum(lazy[key]), key
+
+
+def test_rebuilt_upstream_invalidates_downstream_stages(spark, tmp_path, monkeypatch):
+    """Rebuilding extract with new content re-runs the stages built on
+    it (link, then materialize and enrich through link) and resumes
+    canonicalize, which has no upstream stage, without its
+    connected-components loop. Every re-run stage is rebuilt from the
+    new extract, not merged onto its stale table: the tables equal a
+    fresh staged build over the same extract."""
+    from multiomics_biocypher_kg_spark.plans import lineage, pipeline
+
+    workdir, fresh = str(tmp_path / "wd"), str(tmp_path / "fresh")
+    pipeline.run_staged(spark, SF_TINY, workdir)
+    runner = lineage.StagedRunner(spark, workdir)
+    before = {s: runner.lineage(s)["checksum"] for s in ("extract", "link")}
+    assert runner.lineage("link")["upstream"] == {"extract": before["extract"]}
+
+    # blank the text of every other document: their mentions, and so
+    # their link rows, disappear from the rebuilt stages
+    blanked_path = str(tmp_path / "blanked")
+    spark.read.parquet(os.path.join(workdir, "extract", "data")).withColumn(
+        "text", F.when(F.col("doc_id") % 2 == 0, F.lit("")).otherwise(F.col("text"))
+    ).write.parquet(blanked_path)
+    blanked = lambda: spark.read.parquet(blanked_path)  # noqa: E731
+    runner.run_stage("extract", blanked, ["url"], force=True)
+    assert runner.lineage("extract")["checksum"] != before["extract"]
+
+    def content(table):  # (checksum, n_rows), independent of column order
+        return lineage.content_checksum(table.select(*sorted(table.columns)))
+
+    # the reference: a fresh staged build over the same rebuilt extract
+    lineage.StagedRunner(spark, fresh).run_stage("extract", blanked, ["url"])
+    expected = {
+        key: content(table)
+        for key, table in pipeline.run_staged(spark, SF_TINY, fresh).items()
+    }
+
+    def no_spark_job(*a, **kw):
+        raise AssertionError("upstream mismatch must be decided from lineage.json")
+
+    with monkeypatch.context() as m:
+        m.setattr(lineage, "content_checksum", no_spark_job)
+        assert not runner.is_complete("link")
+
+    rebuilt = []
+    real_merge = lineage.merge_into
+
+    def recording_merge(spark_, target_path, *a, **kw):
+        rebuilt.append(os.path.basename(os.path.dirname(target_path)))
+        return real_merge(spark_, target_path, *a, **kw)
+
+    def no_cc(*a, **kw):
+        raise AssertionError("a resumed canonicalize must not run connected components")
+
+    with monkeypatch.context() as m:
+        m.setattr(lineage, "merge_into", recording_merge)
+        m.setattr(pipeline, "canonical_mapping", no_cc)
+        tables = pipeline.run_staged(spark, SF_TINY, workdir)
+        assert rebuilt == ["link", "materialize", "enrich"]
+        assert runner.lineage("link")["checksum"] != before["link"]
+        assert runner.lineage("materialize")["upstream"] == {
+            "link": runner.lineage("link")["checksum"],
+            "canonicalize": runner.lineage("canonicalize")["checksum"],
+        }
+        for key, table in tables.items():
+            assert content(table) == expected[key], key
+
+        rebuilt.clear()
+        pipeline.run_staged(spark, SF_TINY, workdir)
+        assert rebuilt == []
