@@ -11,10 +11,10 @@ Mirrors the reference's BioCypher emission + import-time hygiene:
   are dropped via leftsemi joins (skip_bad_relationships, :14).
 
 Sink: partitioned parquet stage tables (partitioned by ``pred`` /
-``label`` — the Iceberg layout of the design; this sandbox has no
-Iceberg jars, so ``merge_into`` emulates MERGE INTO with
-anti-join + union + atomic directory swap, preserving the
-exactly-once resume semantics of the north rule).
+``label`` — the Iceberg layout of the design; without Iceberg jars
+``merge_into`` emulates MERGE INTO by appending the keys the table
+lacks, preserving the exactly-once resume semantics of the north
+rule).
 """
 
 from __future__ import annotations
@@ -25,6 +25,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def triples_from_links(links: DataFrame, subj_col: str = "url") -> DataFrame:
@@ -135,9 +136,9 @@ def merge_into_sql_stmt(
     itself is unit-pinned so the two stay in lockstep):
 
       MERGE INTO t USING u ON <null-safe key equality>
-      WHEN MATCHED THEN UPDATE SET
+      [WHEN MATCHED THEN UPDATE SET          -- only with accrete cols
         accrete cols -> array_union(coalesce both sides)
-        other cols   -> overwrite
+        other cols   -> overwrite]
       WHEN NOT MATCHED THEN INSERT *
     """
     accrete = accrete or []
@@ -151,7 +152,7 @@ def merge_into_sql_stmt(
             )
         else:
             sets.append(f"t.`{c}` = u.`{c}`")
-    update = f" WHEN MATCHED THEN UPDATE SET {', '.join(sets)}" if sets else ""
+    update = f" WHEN MATCHED THEN UPDATE SET {', '.join(sets)}" if accrete else ""
     return (
         f"MERGE INTO {table} t USING {updates_view} u ON {on}"
         f"{update} WHEN NOT MATCHED THEN INSERT *"
@@ -198,73 +199,75 @@ def merge_into(
     accrete: list[str] | None = None,
 ) -> None:
     """Idempotent upsert into a parquet stage table (MERGE INTO
-    emulation; on Iceberg this is a real ``MERGE INTO t USING u ON
-    keys WHEN MATCHED ... WHEN NOT MATCHED INSERT *``).
+    emulation; on Iceberg, the ``merge_into_sql_stmt`` statement).
 
-    WHEN-MATCHED rules (G7/U5, post-import.cypher:1052-1094):
-    columns listed in ``accrete`` are ARRAY columns that accumulate
-    via array_union(existing, update) — evidence accretion, matching
-    the reference's ``ON MATCH SET r.evidence_sources = CASE WHEN x
-    IN r.evidence_sources THEN ... ELSE ... + x END``; every other
-    update column overwrites. Re-running with the same updates is a
-    no-op in content terms — the resume primitive of the north rule.
+    Without ``accrete``: insert-if-absent. The updates, deduped on
+    ``keys`` and anti-joined against the target's key columns, are
+    appended as new files. Every caller's key fixes the whole row
+    (``edge_id = subj|pred|obj``), so this equals an upsert, and a
+    re-run appends nothing — the resume primitive of the north rule.
 
-    Scale: one shuffle join keyed by ``keys`` per merge (Iceberg
-    MERGE does the same); the atomic swap is a metadata commit there.
+    Columns in ``accrete`` are ARRAY columns that accumulate on match
+    via array_union(existing, update), other columns overwrite (G7/U5,
+    post-import.cypher:1052-1094); onto an existing target this
+    rewrites the table and swaps it in (batch form: accrete_evidence).
     """
-    accrete = accrete or []
     updates = updates.dropDuplicates(keys)
-    if os.path.isdir(target_path):
-        target = spark.read.parquet(target_path)
-        if not accrete:
-            kept = target.join(updates.select(*keys), keys, "left_anti")
-            merged = kept.unionByName(updates, allowMissingColumns=True)
+    if not (accrete and os.path.isdir(target_path)):
+        if os.path.isdir(target_path):
+            # the next job commit here would publish a crashed write's tasks
+            shutil.rmtree(os.path.join(target_path, "_temporary"), ignore_errors=True)
+            # an explicit schema reads a dir with no data file as empty
+            held = spark.read.schema(
+                T.StructType([updates.schema[k] for k in keys])
+            ).parquet(target_path)
+            # the using-join moves the keys first; keep one column order
+            updates = updates.join(held, keys, "left_anti").select(*updates.columns)
+        updates.write.mode("append").parquet(target_path)
+        return
+    target = spark.read.parquet(target_path)
+    upd_cols = [c for c in updates.columns if c not in keys]
+    u = updates.select(
+        *keys,
+        F.lit(True).alias("_u_present"),
+        *[F.col(c).alias(f"_u_{c}") for c in upd_cols],
+    )
+    j = target.withColumn("_t_present", F.lit(True)).join(
+        u, keys, "full_outer"
+    )
+    matched = F.col("_t_present").isNotNull() & F.col(
+        "_u_present"
+    ).isNotNull()
+    out_cols = list(keys)
+    all_vals = [c for c in target.columns if c not in keys]
+    for c in upd_cols:
+        if c not in all_vals:
+            all_vals.append(c)
+    for c in all_vals:
+        t_val = F.col(c) if c in target.columns else F.lit(None)
+        u_val = F.col(f"_u_{c}") if c in upd_cols else F.lit(None)
+        if c in accrete:
+            # null-safe union without empty-array literals (keeps
+            # element-type inference intact for any array type)
+            union_val = (
+                F.when(t_val.isNull(), u_val)
+                .when(u_val.isNull(), t_val)
+                .otherwise(F.array_union(t_val, u_val))
+            )
+            merged_val = (
+                F.when(matched, union_val)
+                .when(F.col("_u_present").isNotNull(), u_val)
+                .otherwise(t_val)
+            )
         else:
-            upd_cols = [c for c in updates.columns if c not in keys]
-            u = updates.select(
-                *keys,
-                F.lit(True).alias("_u_present"),
-                *[F.col(c).alias(f"_u_{c}") for c in upd_cols],
-            )
-            j = target.withColumn("_t_present", F.lit(True)).join(
-                u, keys, "full_outer"
-            )
-            matched = F.col("_t_present").isNotNull() & F.col(
-                "_u_present"
-            ).isNotNull()
-            out_cols = list(keys)
-            all_vals = [c for c in target.columns if c not in keys]
-            for c in upd_cols:
-                if c not in all_vals:
-                    all_vals.append(c)
-            for c in all_vals:
-                t_val = F.col(c) if c in target.columns else F.lit(None)
-                u_val = F.col(f"_u_{c}") if c in upd_cols else F.lit(None)
-                if c in accrete:
-                    # null-safe union without empty-array literals (keeps
-                    # element-type inference intact for any array type)
-                    union_val = (
-                        F.when(t_val.isNull(), u_val)
-                        .when(u_val.isNull(), t_val)
-                        .otherwise(F.array_union(t_val, u_val))
-                    )
-                    merged_val = (
-                        F.when(matched, union_val)
-                        .when(F.col("_u_present").isNotNull(), u_val)
-                        .otherwise(t_val)
-                    )
-                else:
-                    merged_val = F.when(
-                        F.col("_u_present").isNotNull(), u_val
-                    ).otherwise(t_val)
-                out_cols.append(merged_val.alias(c))
-            merged = j.select(*out_cols)
-    else:
-        merged = updates
+            merged_val = F.when(
+                F.col("_u_present").isNotNull(), u_val
+            ).otherwise(t_val)
+        out_cols.append(merged_val.alias(c))
+    merged = j.select(*out_cols)
     tmp = f"{target_path}__tmp_{uuid.uuid4().hex[:8]}"
     merged.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(target_path):
-        shutil.rmtree(target_path)
+    shutil.rmtree(target_path)
     os.rename(tmp, target_path)
 
 

@@ -14,9 +14,9 @@ and its Schema_info build-stamp node
   parquet stage table + its lineage; a re-run with an existing,
   checksum-matching stage table whose upstream stages still hold the
   content it was built from is a no-op (resume); any other run
-  replaces the stage table with a full build written through
-  merge_into (dedup on the stage keys + atomic swap — the MERGE INTO
-  emulation; on Iceberg this is the real statement).
+  removes the stage and writes a full build into the empty dir
+  through merge_into (dedup on the stage keys, then an append — the
+  MERGE INTO emulation; on Iceberg this is the real statement).
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ import time
 from collections.abc import Callable, Sequence
 from decimal import Decimal
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -119,12 +120,13 @@ class StagedRunner:
                 for up, checksum in recorded.get("upstream", {}).items()
             ):
                 return False
-        except (OSError, ValueError, KeyError):
-            # torn/corrupt lineage.json (crash mid-write) or a missing
-            # upstream -> rebuild, never raise: the documented
+            table = self.spark.read.parquet(data)
+        except (OSError, ValueError, KeyError, AnalysisException):
+            # torn/corrupt lineage.json, a missing upstream or a table
+            # with no data file -> rebuild, never raise: the documented
             # 'half-written stage re-runs' contract
             return False
-        checksum, n = content_checksum(self.spark.read.parquet(data))
+        checksum, n = content_checksum(table)
         return checksum == recorded.get("checksum") and n == recorded.get("n_rows")
 
     def run_stage(
@@ -137,23 +139,21 @@ class StagedRunner:
     ) -> DataFrame:
         """Run (or resume) one stage. If the stage is complete (see
         ``is_complete``), the build is skipped entirely (resume); else
-        ``build`` returns the stage's whole content, which replaces
-        any previous table via merge_into on ``keys`` (dedup on the
-        keys + atomic swap) — no row of an earlier build survives, so
-        re-running a crashed, tampered or invalidated stage converges
-        to the same table (idempotence). The checksums of the
-        ``upstream`` stages are recorded with the stage's lineage, so
-        rebuilding one of them with new content invalidates this
-        stage."""
+        ``build`` returns the stage's whole content, written via
+        merge_into on ``keys`` into the emptied stage dir — no row of
+        an earlier build survives, and a crash before lineage.json is
+        written leaves no lineage, so re-running a crashed, tampered
+        or invalidated stage converges to the same table. The
+        checksums of the ``upstream`` stages are recorded with the
+        stage's lineage, so rebuilding one of them with new content
+        invalidates this stage."""
         data, lin = self._paths(stage)
         if self.is_complete(stage) and not force:
             return self.spark.read.parquet(data)
         upstream_checksums = {up: self.lineage(up)["checksum"] for up in upstream}
         df = build()
-        # a rebuild is a full build: merging onto the stale table would
-        # keep its rows whose keys the new build no longer produces
-        shutil.rmtree(data, ignore_errors=True)
-        os.makedirs(os.path.dirname(data), exist_ok=True)
+        # a full build into an empty dir, with no lineage.json until done
+        shutil.rmtree(os.path.dirname(data), ignore_errors=True)
         merge_into(self.spark, data, df, keys)
         out = self.spark.read.parquet(data)
         # one scan: the stage totals are the partition rows' sums

@@ -38,7 +38,7 @@ from multiomics_biocypher_kg_spark.operators.enrich import (
     rank_percentile_bucket,
 )
 from multiomics_biocypher_kg_spark.operators.extract import extract
-from multiomics_biocypher_kg_spark.operators.link import link, resolution_histogram
+from multiomics_biocypher_kg_spark.operators.link import link
 from multiomics_biocypher_kg_spark.operators.materialize import (
     sameas_triples,
     triples_from_links,
@@ -169,22 +169,10 @@ def compose(src: Sources, upto: str | None = None) -> dict[str, DataFrame]:
 def build_graph(
     spark: SparkSession, sf_dir: str, cc_checkpoint: str = "local"
 ) -> dict[str, DataFrame]:
-    """Run the full DAG over the driver corpus; returns lazy stages
-    plus the inputs and side views between them."""
-    src = Sources(spark, sf_dir, cc_checkpoint)
-    frames = compose(src)
-    out = {stage.output: frames[stage.name] for stage in STAGES}
-    return {
-        "pages": src.pages,
-        "docs": out["docs"],
-        "mentions": mentions_tokens(out["docs"], src.vocab),
-        "links": out["links"],
-        "link_histogram": resolution_histogram(out["links"]),
-        "sameas": src.sameas,
-        "mapping": out["mapping"],
-        "triples": out["triples"],
-        "entity_nodes": out["entity_nodes"],
-    }
+    """The full DAG over the driver corpus as lazy frames, keyed as
+    ``run_staged`` keys its stage tables."""
+    frames = compose(Sources(spark, sf_dir, cc_checkpoint))
+    return {stage.output: frames[stage.name] for stage in STAGES}
 
 
 def run_staged(
@@ -192,8 +180,8 @@ def run_staged(
 ) -> dict[str, DataFrame]:
     """The DAG as idempotent, resumable stage tables (north rule):
     each stage = one parquet stage table + lineage row, built from its
-    upstream stage tables; re-running skips completed stages; a
-    crashed half-write converges via the MERGE INTO emulation (see
+    upstream stage tables; re-running skips completed stages and
+    rebuilds any other, so a crashed half-write converges (see
     plans.lineage.StagedRunner)."""
     from multiomics_biocypher_kg_spark.plans.lineage import StagedRunner
 

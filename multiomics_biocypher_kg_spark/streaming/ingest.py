@@ -5,17 +5,18 @@ stage builds as the batch pipeline (``plans.pipeline.compose``
 through link: pages synth -> extract -> mention -> link are all
 stateless column programs, so they compose with a streaming frame
 unchanged); the sink is ``foreachBatch`` into the MERGE INTO
-emulation keyed by edge_id — so a re-delivered or
-retried micro-batch upserts the same deterministic edge ids and the
-triple table converges exactly-once in content terms (the same
-resume primitive the batch StagedRunner uses; on Iceberg this is a
-real MERGE INTO per micro-batch).
+emulation keyed by edge_id, which appends only the edge ids the
+table lacks and rewrites no file — so a re-delivered or retried
+micro-batch appends nothing and the triple table converges
+exactly-once in content terms (the same resume primitive the batch
+StagedRunner uses; on Iceberg this is a real MERGE INTO per batch).
 
 Scale notes: per-batch work is the batch plan (broadcast link joins,
-no shuffle of the mention stream); the merge joins on edge_id — at
-real scale the target is partitioned by pred and the join prunes to
-touched partitions. Distinct-within-batch happens in foreachBatch
-(a streaming-global distinct would need unbounded state).
+no shuffle of the mention stream); the merge anti-joins on the
+target's edge_id column alone — at real scale the target is
+partitioned by pred and the join prunes to touched partitions.
+Distinct-within-batch happens in foreachBatch (a streaming-global
+distinct would need unbounded state).
 """
 
 from __future__ import annotations

@@ -23,8 +23,9 @@ Local smoke (same artifact, small corpus):
 Every stage materializes as an idempotent parquet stage table with a
 lineage row (counts + checksums); re-submitting the SAME command
 resumes: completed stages verify their recorded checksum and are
-skipped, a crashed half-write converges through the MERGE INTO
-emulation. Exit output is one JSON line with per-stage row counts.
+skipped, and a stage without a matching lineage record (a crashed
+half-write) is rebuilt from scratch. Exit output is one JSON line
+with per-stage row counts, read from the lineage records.
 """
 
 from __future__ import annotations
@@ -56,7 +57,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = ap.parse_args(argv)
 
-    from multiomics_biocypher_kg_spark.plans.pipeline import run_staged
+    from multiomics_biocypher_kg_spark.plans.lineage import StagedRunner
+    from multiomics_biocypher_kg_spark.plans.pipeline import STAGES, run_staged
     from multiomics_biocypher_kg_spark.session import build_session
 
     spark = build_session(
@@ -67,10 +69,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.checkpoint_dir:
         spark.sparkContext.setCheckpointDir(args.checkpoint_dir)
         cc_checkpoint = "reliable"
-    stages = run_staged(
-        spark, args.sf_dir, args.workdir, cc_checkpoint=cc_checkpoint
-    )
-    summary = {name: df.count() for name, df in stages.items()}
+    run_staged(spark, args.sf_dir, args.workdir, cc_checkpoint=cc_checkpoint)
+    runner = StagedRunner(spark, args.workdir)
+    summary = {s.output: runner.lineage(s.name)["n_rows"] for s in STAGES}
     print(json.dumps({"status": "ok", "rows": summary}))
     spark.stop()
     return 0

@@ -1,9 +1,13 @@
 """MERGE-with-accretion semantics (G7/U5): the incremental
 merge_into(accrete=...) fold equals the one-shot accrete_evidence
 batch form, re-runs are idempotent, and non-accrete columns
-overwrite on match (post-import.cypher:1052-1094)."""
+overwrite on match (post-import.cypher:1052-1094). Without accrete
+columns the merge is insert-if-absent: it only appends new files."""
 
 from __future__ import annotations
+
+import os
+import shutil
 
 from pyspark.sql import functions as F
 
@@ -97,6 +101,14 @@ def test_merge_into_sql_stmt_renders_catalog_twin():
         "t.`assay_count` = u.`assay_count` "
         "WHEN NOT MATCHED THEN INSERT *"
     )
+    # no accrete column: insert-if-absent, as the emulation appends
+    stmt = merge_into_sql_stmt(
+        "kg.triples", "updates", keys=["edge_id"], value_cols=["subj", "pred", "obj"]
+    )
+    assert stmt == (
+        "MERGE INTO kg.triples t USING updates u ON t.`edge_id` <=> u.`edge_id` "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
 
 
 def test_merge_overwrites_non_accrete_columns(spark, tmp_path):
@@ -122,3 +134,65 @@ def test_merge_overwrites_non_accrete_columns(spark, tmp_path):
     assert rows[("o1", "m1")].assay_count == 5  # overwritten on match
     assert list(rows[("o2", "m2")].evidence_sources) == ["measured"]
     assert rows[("o2", "m2")].assay_count == 2
+
+
+def _triples(spark, pairs):
+    """Triples keyed by edge_id, which fixes the row; the key comes last."""
+    return spark.createDataFrame(
+        [(s, "mentions", o, f"{s}|mentions|{o}") for s, o in pairs],
+        "subj string, pred string, obj string, edge_id string",
+    )
+
+
+def _part_files(path):
+    return {
+        f: os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    }
+
+
+def test_merge_without_accrete_appends_only_new_keys(spark, tmp_path):
+    """Onto an existing table, a merge keeps every part file as it was
+    (same names, same sizes) and adds files holding only the keys the
+    table lacked; every file keeps the updates' column order."""
+    target = str(tmp_path / "triples")
+    first = _triples(spark, [("u1", "e1"), ("u1", "e2"), ("u2", "e1")])
+    merge_into(spark, target, first, ["edge_id"])
+    before = _part_files(target)
+
+    second = _triples(spark, [("u1", "e2"), ("u2", "e1"), ("u3", "e3"), ("u3", "e3")])
+    merge_into(spark, target, second, ["edge_id"])
+    after = _part_files(target)
+    assert {f: after[f] for f in before} == before
+    added = spark.read.parquet(*(os.path.join(target, f) for f in after if f not in before))
+    assert sorted(tuple(r) for r in added.collect()) == [
+        ("u3", "mentions", "e3", "u3|mentions|e3")
+    ]
+    back = spark.read.parquet(target)
+    assert back.columns == second.columns
+    assert sorted(r.edge_id for r in back.collect()) == [
+        "u1|mentions|e1", "u1|mentions|e2", "u2|mentions|e1", "u3|mentions|e3",
+    ]
+
+
+def test_merge_onto_crashed_write_leftover(spark, tmp_path):
+    """A target dir that holds only a crashed write's committed task
+    under _temporary/ merges to exactly the updates: the dir reads as
+    empty, and the stale task's rows are not published by the next
+    job commit."""
+    stale = str(tmp_path / "stale")
+    _triples(spark, [("old", "e9")]).coalesce(1).write.parquet(stale)
+    target = str(tmp_path / "triples")
+    task = os.path.join(target, "_temporary", "0", "task_202601010000_0001_m_000000")
+    os.makedirs(task)
+    for f in _part_files(stale):
+        shutil.copy(os.path.join(stale, f), task)
+
+    updates = _triples(spark, [("u1", "e1"), ("u2", "e2")])
+    merge_into(spark, target, updates, ["edge_id"])
+    back = spark.read.parquet(target)
+    assert back.columns == updates.columns
+    assert sorted(tuple(r) for r in back.collect()) == sorted(
+        tuple(r) for r in updates.collect()
+    )

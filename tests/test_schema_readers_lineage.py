@@ -386,3 +386,53 @@ def test_rebuilt_upstream_invalidates_downstream_stages(spark, tmp_path, monkeyp
         rebuilt.clear()
         pipeline.run_staged(spark, SF_TINY, workdir)
         assert rebuilt == []
+
+
+def test_run_stage_faults_converge_to_the_clean_tables(spark, tmp_path, monkeypatch):
+    """Two faults of a stage write, each repaired by the next plain
+    run_staged to the clean build's (checksum, n_rows) per stage: a
+    merge that commits part of the stage's files and then dies, and a
+    part file lost under an intact lineage.json."""
+    from multiomics_biocypher_kg_spark.plans import lineage, pipeline
+
+    workdir = str(tmp_path)
+    pipeline.run_staged(spark, SF_TINY, workdir)
+    runner = lineage.StagedRunner(spark, workdir)
+
+    def recorded():
+        return {
+            s.name: (runner.lineage(s.name)["checksum"], runner.lineage(s.name)["n_rows"])
+            for s in pipeline.STAGES
+        }
+
+    clean = recorded()
+    stage_dir = os.path.join(workdir, "materialize")
+    data = os.path.join(stage_dir, "data")
+
+    # 1. the rebuild's merge commits half the rows, then the run dies
+    os.remove(os.path.join(stage_dir, "lineage.json"))
+    real_merge = lineage.merge_into
+
+    def crashing_merge(spark_, target_path, updates, keys, *a, **kw):
+        real_merge(spark_, target_path, updates.where(F.hash(*keys) % 2 == 0), keys)
+        raise RuntimeError("killed mid-commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(lineage, "merge_into", crashing_merge)
+        with pytest.raises(RuntimeError, match="killed mid-commit"):
+            pipeline.run_staged(spark, SF_TINY, workdir)
+    assert any(f.endswith(".parquet") for f in os.listdir(data))
+    assert not os.path.exists(os.path.join(stage_dir, "lineage.json"))
+    assert not runner.is_complete("materialize")
+    pipeline.run_staged(spark, SF_TINY, workdir)
+    assert recorded() == clean
+
+    # 2. the largest part file (at this size the only one) disappears;
+    # lineage.json still records the table
+    parts = {f: os.path.getsize(os.path.join(data, f)) for f in os.listdir(data)
+             if f.endswith(".parquet")}
+    os.remove(os.path.join(data, max(parts, key=parts.get)))
+    assert not runner.is_complete("materialize")
+    tables = pipeline.run_staged(spark, SF_TINY, workdir)
+    assert recorded() == clean
+    assert lineage.content_checksum(tables["triples"]) == clean["materialize"]

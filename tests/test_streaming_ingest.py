@@ -38,9 +38,8 @@ def test_streaming_ingest_matches_batch_and_is_idempotent(spark, tmp_path):
 
     target = str(tmp_path / "triples")
     ckpt = str(tmp_path / "ckpt")
-    # materialize eagerly: merge_into atomically swaps the target dir,
-    # so a lazily-held DataFrame's file listing goes stale after reruns
-    out = _triples_set(run_streaming_triples(spark, src, target, ckpt))
+    held = run_streaming_triples(spark, src, target, ckpt)
+    out = _triples_set(held)
 
     batch = with_edge_id(
         triples_from_links(
@@ -63,3 +62,7 @@ def test_streaming_ingest_matches_batch_and_is_idempotent(spark, tmp_path):
     )
     assert out2 == batch_set
     assert os.path.isdir(target)
+    # the replay appended no row and rewrote no file: a DataFrame read
+    # from the target before it still reads the same triples
+    assert _triples_set(held) == batch_set
+    assert spark.read.parquet(target).count() == len(batch_set)
