@@ -13,8 +13,9 @@ version:
 - converges in O(component diameter) rounds; same-as components
   are shallow (reference: fixed point in 2-3 passes), so 5-15
   rounds in practice,
-- ``localCheckpoint`` every round truncates the lineage so the plan
-  doesn't grow exponentially,
+- a checkpoint every round truncates the lineage so the plan
+  doesn't grow exponentially (reliable when the session has a
+  checkpoint dir, else ``localCheckpoint``),
 - skew: min() aggregation does map-side partial aggregation
   (combiners), so a hot node's updates collapse before the shuffle;
   AQE skew-join handles the join side.
@@ -27,21 +28,27 @@ tier-1 anchors are conflicts and quarantined (G1 semantics).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from multiomics_biocypher_kg_spark.plans.tuning import (
+    scaled_partitions,
+    scoped_shuffle_partitions,
+)
 
-def _ckpt(df: DataFrame, mode: str) -> DataFrame:
-    """Lineage truncation per round. 'local' = executor-local blocks
+
+def _ckpt(spark: SparkSession) -> Callable[[DataFrame], DataFrame]:
+    """Lineage truncation per round, decided by the session: with a
+    checkpoint dir set (``spark.sparkContext.setCheckpointDir`` to
+    durable storage — the 1000-executor setting, where executor loss
+    is routine) a reliable checkpoint, else executor-local blocks
     (fast; a lost executor kills the run — fine single-node / retried
-    jobs). 'reliable' = HDFS/DFS checkpoint (caller must
-    ``spark.sparkContext.setCheckpointDir`` to durable storage) —
-    the 1000-executor setting, where executor loss is routine."""
-    if mode == "reliable":
-        return df.checkpoint(eager=True)
-    if mode == "local":
-        return df.localCheckpoint(eager=True)
-    return df
+    jobs)."""
+    if spark.sparkContext.getCheckpointDir() is not None:
+        return lambda df: df.checkpoint(eager=True)
+    return lambda df: df.localCheckpoint(eager=True)
 
 
 def connected_components(
@@ -49,8 +56,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    checkpoint: str = "local",
-    shortcut: bool = True,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) with component = min node id.
 
@@ -58,17 +63,19 @@ def connected_components(
     component under the natural ordering of the id type.
 
     Each round: min over neighbor labels (one keyed shuffle,
-    map-side combined), then — with ``shortcut`` — one pointer-jump
-    (component := component-of-component), which doubles effective
-    propagation distance: O(log diameter) rounds on chainy graphs
-    instead of O(diameter), at one extra self-join per round. For
-    the shallow same-as graphs of the reference both converge in
-    2-3 rounds; the shortcut is what survives a web-scale crawl
-    graph with long URL chains.
+    map-side combined), then a double pointer jump
+    (component := component-of-component-of-component), which
+    multiplies the effective propagation distance: O(log diameter)
+    rounds on chainy graphs instead of O(diameter), at two extra
+    self-joins per round. The shallow same-as graphs of the
+    reference converge in 1-2 rounds; the jump is what survives a
+    web-scale crawl graph with long URL chains.
 
     Raises RuntimeError if max_iter rounds exhaust without
     convergence — unconverged labels would silently split components.
     """
+    spark = edges.sparkSession
+    ckpt = _ckpt(spark)
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .where(F.col("a").isNotNull() & F.col("b").isNotNull())
@@ -81,60 +88,40 @@ def connected_components(
     # ``edges`` is itself a pipeline (the dedup-cluster path feeds
     # verified LSH pairs in) the whole upstream DAG would re-run
     # every round. One checkpoint job up front, O(rounds) saved.
-    und = _ckpt(und, checkpoint)
-    if checkpoint in ("local", "reliable"):
-        # round-state exchanges sized by the MATERIALIZED edge count
-        # (plans.tuning): the label/frontier tables the loop shuffles
-        # are bounded by it, and the count is a cached-block scan.
-        from multiomics_biocypher_kg_spark.plans.tuning import (
-            scaled_partitions,
-            scoped_shuffle_partitions,
+    und = ckpt(und)
+    # round-state exchanges sized by the MATERIALIZED edge count
+    # (plans.tuning): the label/frontier tables the loop shuffles are
+    # bounded by it, and the count is a cached-block scan.
+    with scoped_shuffle_partitions(spark, scaled_partitions(spark, und.count())):
+        # fused init = the first propagation round: label(v) = min(v, N(v))
+        # in the same agg that enumerates the nodes — saves one full
+        # checkpoint job vs initializing to the identity labeling.
+        labels = ckpt(
+            und.groupBy(F.col("a").alias("node")).agg(
+                F.least(F.min("b"), F.col("a")).alias("component")
+            )
         )
-
-        with scoped_shuffle_partitions(
-            edges.sparkSession, scaled_partitions(edges.sparkSession, und.count())
-        ):
-            return _cc_rounds(und, max_iter, checkpoint, shortcut)
-    return _cc_rounds(und, max_iter, checkpoint, shortcut)
-
-
-def _cc_rounds(
-    und: DataFrame, max_iter: int, checkpoint: str, shortcut: bool
-) -> DataFrame:
-    """The propagation loop of :func:`connected_components` (split out
-    so the scale-adaptive partition scope wraps every round plan)."""
-    # fused init = the first propagation round: label(v) = min(v, N(v))
-    # in the same agg that enumerates the nodes — saves one full
-    # checkpoint job vs initializing to the identity labeling.
-    labels = _ckpt(
-        und.groupBy(F.col("a").alias("node")).agg(
-            F.least(F.min("b"), F.col("a")).alias("component")
-        ),
-        checkpoint,
-    )
-    # convergence probe: min-label propagation is monotone (labels only
-    # ever decrease), so convergence = no node's label shrank this
-    # round. The OLD label rides through the same min() aggregation
-    # as a side column (each node contributes exactly one non-null
-    # old_comp, from its own-label branch), so the probe is a filter
-    # count over the freshly checkpointed frame — a cached-block
-    # scan, not the former per-round join job. With the pointer
-    # jump, shallow graphs (the same-as case) converge in 1-2 rounds,
-    # so probing EVERY round ends the loop at the earliest fixed
-    # point.
-    comp_type = labels.schema["component"].dataType
-    null_old = F.lit(None).cast(comp_type).alias("old_comp")
-    changed = None
-    for it in range(max_iter):
-        neighbor = (
-            und.join(labels, und.b == labels.node)
-            .select(und.a.alias("node"), "component", null_old)
-        )
-        own = labels.select(
-            "node", "component", F.col("component").alias("old_comp")
-        )
-        candidates = own.union(neighbor)
-        if shortcut:
+        # convergence probe: min-label propagation is monotone (labels only
+        # ever decrease), so convergence = no node's label shrank this
+        # round. The OLD label rides through the same min() aggregation
+        # as a side column (each node contributes exactly one non-null
+        # old_comp, from its own-label branch), so the probe is a filter
+        # count over the freshly checkpointed frame — a cached-block
+        # scan, not the former per-round join job. With the pointer
+        # jump, shallow graphs (the same-as case) converge in 1-2 rounds,
+        # so probing EVERY round ends the loop at the earliest fixed
+        # point.
+        comp_type = labels.schema["component"].dataType
+        null_old = F.lit(None).cast(comp_type).alias("old_comp")
+        changed = None
+        for _ in range(max_iter):
+            neighbor = (
+                und.join(labels, und.b == labels.node)
+                .select(und.a.alias("node"), "component", null_old)
+            )
+            own = labels.select(
+                "node", "component", F.col("component").alias("old_comp")
+            )
             # pointer jump: component-of-component joins INTO the
             # union feeding the min() agg (same fixed point; keeping
             # the checkpoint directly after the agg also sidesteps a
@@ -146,7 +133,6 @@ def _cc_rounds(
                 labels.join(l2, labels.component == l2.c_node)
                 .select("node", F.col("c_comp").alias("component"), null_old)
             )
-            candidates = candidates.union(jump)
             # DOUBLE jump (component^3 per round): one more state-
             # table join triples effective propagation distance, so
             # shallow graphs converge a full round earlier — with the
@@ -167,16 +153,19 @@ def _cc_rounds(
                     null_old,
                 )
             )
-            candidates = candidates.union(jump2)
-        new_labels = candidates.groupBy("node").agg(
-            F.min("component").alias("component"),
-            F.min("old_comp").alias("old_comp"),
-        )
-        ck = _ckpt(new_labels, checkpoint)
-        changed = ck.where(F.col("component") != F.col("old_comp")).count()
-        labels = ck.select("node", "component")
-        if changed == 0:
-            break
+            new_labels = (
+                own.union(neighbor).union(jump).union(jump2)
+                .groupBy("node")
+                .agg(
+                    F.min("component").alias("component"),
+                    F.min("old_comp").alias("old_comp"),
+                )
+            )
+            ck = ckpt(new_labels)
+            changed = ck.where(F.col("component") != F.col("old_comp")).count()
+            labels = ck.select("node", "component")
+            if changed == 0:
+                break
     if changed != 0:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
@@ -190,7 +179,6 @@ def canonical_mapping(
     anchors: DataFrame | None = None,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    checkpoint: str = "local",
 ) -> DataFrame:
     """sameas evidence -> (entity_id, canonical_id, is_conflict).
 
@@ -202,9 +190,7 @@ def canonical_mapping(
 
     ``anchors``: optional DataFrame(entity_id) of tier-1 anchor ids.
     """
-    comp = connected_components(
-        sameas, src=id_a, dst=id_b, checkpoint=checkpoint
-    ).select(
+    comp = connected_components(sameas, src=id_a, dst=id_b).select(
         F.col("node").alias("entity_id"), "component"
     )
     if anchors is None:

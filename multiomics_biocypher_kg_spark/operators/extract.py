@@ -3,17 +3,16 @@
 The HTML->text transform is the corpus analog of the reference's
 PDF extraction (S9/S10 in SURVEY.md §2.1;
 /root/reference/multiomics_kg/adapters/pdf_publication_extraction.py:154-265).
-It is the ONE place per-row Python runs in the hot path, so it is a
-vectorized Arrow pandas UDF (series of bytes -> series of str), never
-a row-at-a-time UDF.
+The rule chain runs as JVM column expressions, so no row crosses to
+Python; ``html_to_text`` is its Python reference, a vectorized Arrow
+pandas UDF (series of bytes -> series of str), never a row-at-a-time
+UDF.
 
 Scale notes (100 TB design point):
-- input is repartitioned by url hash: extraction is embarrassingly
-  parallel and url is unique, so hash(url) gives uniform partitions
-  regardless of hot-host skew (hosts are NOT the partitioning key
-  here — host-keyed stages salt instead).
-- binary column stays binary through Arrow (no pandas dtype
-  coercion): each element arrives as Python ``bytes``; the UDF output
+- extraction is a per-row projection: embarrassingly parallel, it
+  keeps the input's partitioning and adds no exchange.
+- in the reference UDF the binary column stays binary through Arrow
+  (no pandas dtype coercion): each element arrives as Python ``bytes``; the UDF output
   is deterministic per url across any Arrow batch boundary, which is
   what makes the byte-identical invariant hold.
 - the plan keeps the parquet scan pruned to the four needed columns.
@@ -26,7 +25,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from multiomics_biocypher_kg_spark.functions.text import extract_text
+from multiomics_biocypher_kg_spark.functions.text import (
+    extract_text,
+    extract_text_native,
+)
 
 
 @F.pandas_udf(T.StringType())
@@ -35,33 +37,19 @@ def html_to_text(html: pd.Series) -> pd.Series:
     return html.map(extract_text)
 
 
-def extract(
-    pages: DataFrame,
-    num_partitions: int | None = None,
-    engine: str = "native",
-) -> DataFrame:
+def extract(pages: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html, lang, ...) -> docs(url, warc_ts, lang, text).
 
     Extra columns (e.g. the doc_id parity key) are passed through.
 
-    engine:
-    - 'native' (default): the rule chain as JVM regexp Column ops
-      (functions.text.extract_text_native) — whole-stage codegen,
-      no Python, linear core scaling. Measured: the Arrow shuttle of
-      raw html dominates the UDF engine on wide binary rows (a no-op
-      pandas UDF over 10 GB html costs ~10 s regardless of cores).
-    - 'arrow': the vectorized pandas UDF (full html.unescape entity
-      fidelity). Tests pin native == arrow on every test corpus.
+    The rule chain runs as JVM regexp Column ops
+    (functions.text.extract_text_native) — whole-stage codegen, no
+    Python, linear core scaling. Measured: the Arrow shuttle of raw
+    html dominates a pandas-UDF engine on wide binary rows (a no-op
+    pandas UDF over 10 GB html costs ~10 s regardless of cores).
+    ``html_to_text`` is the Python reference (full html.unescape
+    entity fidelity); tests pin this chain equal to it on every test
+    corpus.
     """
-    from multiomics_biocypher_kg_spark.functions.text import extract_text_native
-
     passthrough = [c for c in pages.columns if c not in ("html", "text")]
-    df = pages
-    if num_partitions:
-        df = df.repartition(num_partitions, "url")
-    text = (
-        extract_text_native(F.col("html"))
-        if engine == "native"
-        else html_to_text(F.col("html"))
-    )
-    return df.select(*passthrough, text.alias("text"))
+    return pages.select(*passthrough, extract_text_native(F.col("html")).alias("text"))

@@ -28,8 +28,9 @@ Design for 100 TB:
   broadcast 1-row aggregates — no ``.collect()`` in the loop.
   ``checkpoint_every`` truncates plan lineage for deep iteration
   counts (local checkpoint here; on a real cluster use
-  ``spark.sparkContext.setCheckpointDir`` + reliable checkpoints,
-  same switch as operators.canonicalize.connected_components).
+  ``spark.sparkContext.setCheckpointDir`` + reliable checkpoints, as
+  operators.canonicalize.connected_components does once a checkpoint
+  dir is set).
 """
 
 from __future__ import annotations
@@ -172,8 +173,8 @@ def pagerank(
     an untruncated plan re-derives the EDGE PIPELINE O(3^iters)
     times — measured 143 s -> 19 s at sf0.01 when the edges come
     from the full mention cascade. On a real cluster swap localCheckpoint
-    for reliable checkpoints (same switch as
-    operators.canonicalize.connected_components).
+    for reliable checkpoints (as operators.canonicalize.connected_components
+    does once the session has a checkpoint dir).
     """
     out_w = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
     norm = (

@@ -10,11 +10,10 @@ Mirrors the reference's BioCypher emission + import-time hygiene:
 - referential integrity: edges whose subj/obj is not a known node
   are dropped via leftsemi joins (skip_bad_relationships, :14).
 
-Sink: partitioned parquet stage tables (partitioned by ``pred`` /
-``label`` — the Iceberg layout of the design; without Iceberg jars
-``merge_into`` emulates MERGE INTO by appending the keys the table
-lacks, preserving the exactly-once resume semantics of the north
-rule).
+Sink: parquet stage tables (the Iceberg tables of the design; without
+Iceberg jars ``merge_into`` emulates MERGE INTO by appending the keys
+the table lacks, preserving the exactly-once resume semantics of the
+north rule).
 """
 
 from __future__ import annotations
@@ -202,7 +201,8 @@ def merge_into(
     emulation; on Iceberg, the ``merge_into_sql_stmt`` statement).
 
     Without ``accrete``: insert-if-absent. The updates, deduped on
-    ``keys`` and anti-joined against the target's key columns, are
+    ``keys`` and anti-joined against the target's key columns (null
+    keys match null-safely, as ``<=>`` in the statement), are
     appended as new files. Every caller's key fixes the whole row
     (``edge_id = subj|pred|obj``), so this equals an upsert, and a
     re-run appends nothing — the resume primitive of the north rule.
@@ -221,8 +221,8 @@ def merge_into(
             held = spark.read.schema(
                 T.StructType([updates.schema[k] for k in keys])
             ).parquet(target_path)
-            # the using-join moves the keys first; keep one column order
-            updates = updates.join(held, keys, "left_anti").select(*updates.columns)
+            on = [F.col(f"u.{k}").eqNullSafe(F.col(f"t.{k}")) for k in keys]
+            updates = updates.alias("u").join(held.alias("t"), on, "left_anti")
         updates.write.mode("append").parquet(target_path)
         return
     target = spark.read.parquet(target_path)

@@ -134,7 +134,6 @@ class StagedRunner:
         stage: str,
         build: Callable[[], DataFrame],
         keys: list[str],
-        force: bool = False,
         upstream: Sequence[str] = (),
     ) -> DataFrame:
         """Run (or resume) one stage. If the stage is complete (see
@@ -148,7 +147,7 @@ class StagedRunner:
         stage's lineage, so rebuilding one of them with new content
         invalidates this stage."""
         data, lin = self._paths(stage)
-        if self.is_complete(stage) and not force:
+        if self.is_complete(stage):
             return self.spark.read.parquet(data)
         upstream_checksums = {up: self.lineage(up)["checksum"] for up in upstream}
         df = build()

@@ -7,11 +7,11 @@ the build's ``Sources`` and the upstream frames, and the merge keys
 of its table (mention is a step inside the link stage, not a table).
 Every entry point of the DAG walks this one list:
 
-- ``run_staged`` persists each stage as a partitioned parquet stage
-  table with lineage (the Iceberg-layout stand-in). Each build reads
-  the tables its upstream stages just wrote or resumed, so no plan
-  runs twice, and a resumed stage builds nothing (a resumed
-  canonicalize runs no connected-components loop).
+- ``run_staged`` persists each stage as a parquet stage table with
+  lineage (the Iceberg-layout stand-in). Each build reads the tables
+  its upstream stages just wrote or resumed, so no plan runs twice,
+  and a resumed stage builds nothing (a resumed canonicalize runs no
+  connected-components loop).
 - ``compose`` chains the builds lazily: ``build_graph`` returns the
   whole DAG, ``registry._pipeline`` and the streaming ingest take the
   prefix through ``link``. Callers decide what to materialize.
@@ -71,23 +71,16 @@ class Sources:
     """The build's inputs, each made on first use, so a prefix of the
     DAG or a resumed build touches only what it needs. ``pages``
     overrides the corpus read (the streaming ingest passes its
-    micro-batch pages).
-
-    ``cc_checkpoint='reliable'`` makes the connected-components loop
-    checkpoint to the durable dir set via setCheckpointDir — the
-    multi-executor setting where a lost executor must not kill the
-    lineage-truncated run."""
+    micro-batch pages)."""
 
     def __init__(
         self,
         spark: SparkSession,
         sf_dir: str | None = None,
-        cc_checkpoint: str = "local",
         pages: DataFrame | None = None,
     ):
         self.spark = spark
         self.sf_dir = sf_dir
-        self.cc_checkpoint = cc_checkpoint
         if pages is not None:
             self.pages = pages
 
@@ -109,7 +102,7 @@ def _link(src: Sources, docs: DataFrame) -> DataFrame:
 
 
 def _canonicalize(src: Sources) -> DataFrame:
-    return canonical_mapping(src.sameas, checkpoint=src.cc_checkpoint)
+    return canonical_mapping(src.sameas)
 
 
 def _materialize(src: Sources, links: DataFrame, mapping: DataFrame) -> DataFrame:
@@ -166,18 +159,14 @@ def compose(src: Sources, upto: str | None = None) -> dict[str, DataFrame]:
     return _walk(src, lambda stage, thunk: thunk(), upto)
 
 
-def build_graph(
-    spark: SparkSession, sf_dir: str, cc_checkpoint: str = "local"
-) -> dict[str, DataFrame]:
+def build_graph(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """The full DAG over the driver corpus as lazy frames, keyed as
     ``run_staged`` keys its stage tables."""
-    frames = compose(Sources(spark, sf_dir, cc_checkpoint))
+    frames = compose(Sources(spark, sf_dir))
     return {stage.output: frames[stage.name] for stage in STAGES}
 
 
-def run_staged(
-    spark: SparkSession, sf_dir: str, workdir: str, cc_checkpoint: str = "local"
-) -> dict[str, DataFrame]:
+def run_staged(spark: SparkSession, sf_dir: str, workdir: str) -> dict[str, DataFrame]:
     """The DAG as idempotent, resumable stage tables (north rule):
     each stage = one parquet stage table + lineage row, built from its
     upstream stage tables; re-running skips completed stages and
@@ -187,7 +176,7 @@ def run_staged(
 
     runner = StagedRunner(spark, workdir)
     tables = _walk(
-        Sources(spark, sf_dir, cc_checkpoint),
+        Sources(spark, sf_dir),
         lambda stage, thunk: runner.run_stage(
             stage.name, thunk, list(stage.keys), upstream=stage.upstream
         ),

@@ -32,18 +32,13 @@ from pyspark.sql import functions as F
 from multiomics_biocypher_kg_spark.operators.canonicalize import connected_components
 from multiomics_biocypher_kg_spark.operators.link import resolution_histogram
 from multiomics_biocypher_kg_spark.operators.mention import mentions_tokens
-from multiomics_biocypher_kg_spark.operators.materialize import (
-    sameas_triples,
-    triples_from_links,
-    with_edge_id,
-)
-from multiomics_biocypher_kg_spark.operators.canonicalize import canonical_mapping
 from multiomics_biocypher_kg_spark.operators.enrich import (
     entity_rollups,
     rank_percentile_bucket,
 )
 from multiomics_biocypher_kg_spark.plans.pipeline import (
     Sources,
+    build_graph,
     compose,
     sameas_from_documents,
 )
@@ -595,11 +590,9 @@ def kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("kg_triples", oracle=TRIPLES_SQL)
 def kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stage 5: the materialized (subj, pred, obj) triple table."""
-    p = _pipeline(spark, sf_dir)
-    mention_triples = triples_from_links(p["links"], subj_col="url")
-    mapping = canonical_mapping(sameas_from_documents(spark, sf_dir))
-    return with_edge_id(mention_triples.unionByName(sameas_triples(mapping)))
+    """Stage 5: the materialized (subj, pred, obj) triple table, the
+    same plan ``run_staged`` writes."""
+    return build_graph(spark, sf_dir)["triples"]
 
 
 @register(

@@ -21,6 +21,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_mem() -> str:
+    """Half the host's RAM (2-16 GB), unless SPARK_GRAFT_DRIVER_MEM is
+    set. ParallelGC grows the heap toward its maximum over a long run,
+    and a maximum above the host's RAM ends with the JVM killed."""
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(2, min(16, ram_gb // 2))}g")
+
+
 def build_session(
     app_name: str = "multiomics_biocypher_kg_spark",
     master: str | None = None,
@@ -66,7 +74,7 @@ def build_session(
         .config("spark.sql.parquet.columnarReaderBatchSize", "1024")
         # exact percentile + deterministic float handling for oracle parity
         .config("spark.sql.legacy.allowUntypedScalaUDF", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_mem())
         # batch engine, no pause SLO: the throughput collector beats G1
         # under the page-copy allocation rate of regexp-heavy extraction
         # (measured ~1.7x on the scaling corpus at 32 threads)

@@ -48,7 +48,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--checkpoint-dir",
         default=None,
-        help="durable checkpoint dir (enables reliable CC checkpointing)",
+        help="durable checkpoint dir (the CC loop then checkpoints reliably)",
     )
     ap.add_argument(
         "--local-master",
@@ -65,11 +65,9 @@ def main(argv: list[str] | None = None) -> int:
         master=args.local_master or "submit",
         shuffle_partitions=args.shuffle_partitions,
     )
-    cc_checkpoint = "local"
     if args.checkpoint_dir:
         spark.sparkContext.setCheckpointDir(args.checkpoint_dir)
-        cc_checkpoint = "reliable"
-    run_staged(spark, args.sf_dir, args.workdir, cc_checkpoint=cc_checkpoint)
+    run_staged(spark, args.sf_dir, args.workdir)
     runner = StagedRunner(spark, args.workdir)
     summary = {s.output: runner.lineage(s.name)["n_rows"] for s in STAGES}
     print(json.dumps({"status": "ok", "rows": summary}))

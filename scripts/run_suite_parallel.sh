@@ -5,7 +5,7 @@
 # Exit status is non-zero if ANY leg fails. Logs land in /tmp.
 set -u
 cd "$(dirname "$0")/.."
-# five JVMs share the host: a tenth of its RAM each (conftest keeps it)
+# five JVMs share the host: a tenth of its RAM each (build_session keeps it)
 ram_gb=$(awk '/MemTotal/ {print int($2 / 1048576)}' /proc/meminfo)
 export SPARK_GRAFT_DRIVER_MEM="${SPARK_GRAFT_DRIVER_MEM:-$(( ram_gb / 10 > 2 ? ram_gb / 10 : 2 ))g}"
 pids=()

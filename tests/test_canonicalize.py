@@ -43,10 +43,10 @@ def test_components_long_chain_shortcut_converges(spark):
         for r in connected_components(edges, max_iter=25).collect()
     }
     assert out == {i: 0 for i in range(n)}
-    # without the shortcut the same budget must raise, not return
+    # a budget below the O(log diameter) rounds must raise, not return
     # silently-split components
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=10, shortcut=False)
+        connected_components(edges, max_iter=1)
 
 
 def test_components_on_driver_sameas(spark):

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from multiomics_biocypher_kg_spark.functions.text import extract_text, synth_html
-from multiomics_biocypher_kg_spark.operators.extract import extract
+from multiomics_biocypher_kg_spark.operators.extract import extract, html_to_text
 from multiomics_biocypher_kg_spark.sources.pages import pages_from_documents
 from tests.conftest import SF_TINY
 
@@ -35,7 +35,7 @@ def test_spark_native_synth_matches_python(spark):
 
 def test_extract_stage_byte_identical(spark):
     pages = pages_from_documents(spark, SF_TINY)
-    docs = extract(pages, num_partitions=4)
+    docs = extract(pages.repartition(4, "url"))
     mismatch = (
         docs.alias("d")
         .join(pages.select("doc_id", F.col("text").alias("oracle")), "doc_id")
@@ -59,8 +59,8 @@ def test_native_equals_arrow_engine(spark):
     from pyspark.sql import functions as F
 
     pages = pages_from_documents(spark, SF_TINY)
-    nat = extract(pages, engine="native").select("doc_id", F.col("text").alias("t_nat"))
-    arr = extract(pages, engine="arrow").select("doc_id", F.col("text").alias("t_arr"))
+    nat = extract(pages).select("doc_id", F.col("text").alias("t_nat"))
+    arr = pages.select("doc_id", html_to_text(F.col("html")).alias("t_arr"))
     bad = nat.join(arr, "doc_id").where(
         (F.col("t_nat") != F.col("t_arr")) | F.col("t_nat").isNull()
     ).count()

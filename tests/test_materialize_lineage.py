@@ -176,6 +176,18 @@ def test_merge_without_accrete_appends_only_new_keys(spark, tmp_path):
     ]
 
 
+def test_merge_matches_null_keys_like_the_statement(spark, tmp_path):
+    """Insert-if-absent matches keys null-safely, as ``<=>`` does in
+    ``merge_into_sql_stmt``: merging the same rows again, one of them
+    with a null key, appends nothing."""
+    target = str(tmp_path / "t")
+    rows = spark.createDataFrame([("a", 1), (None, 2)], "k string, v int")
+    for _ in range(3):
+        merge_into(spark, target, rows, ["k"])
+    back = spark.read.parquet(target).collect()
+    assert sorted((r.k or "", r.v) for r in back) == [("", 2), ("a", 1)]
+
+
 def test_merge_onto_crashed_write_leftover(spark, tmp_path):
     """A target dir that holds only a crashed write's committed task
     under _temporary/ merges to exactly the updates: the dir reads as

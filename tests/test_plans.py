@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from multiomics_biocypher_kg_spark.operators.extract import extract
+from multiomics_biocypher_kg_spark.operators.extract import extract, html_to_text
 from multiomics_biocypher_kg_spark.operators.link import link
 from multiomics_biocypher_kg_spark.operators.mention import mentions_tokens
 from multiomics_biocypher_kg_spark.sources.pages import pages_from_documents
@@ -46,7 +46,7 @@ def test_star_join_broadcasts_dims(spark):
 
 def test_extract_native_stays_in_codegen(spark):
     pages = pages_from_documents(spark, SF_TINY)
-    df = extract(pages, engine="native").select("text")
+    df = extract(pages).select("text")
     # the seed-scan rebalance adds an Exchange, so AQE wraps the plan
     # and only exposes codegen spans once the final plan is chosen —
     # execute THIS DataFrame's own query execution first (count()
@@ -60,7 +60,7 @@ def test_extract_native_stays_in_codegen(spark):
 
 def test_extract_arrow_engine_uses_arrow(spark):
     pages = pages_from_documents(spark, SF_TINY)
-    plan = _plan(extract(pages, engine="arrow").select("text"))
+    plan = _plan(pages.select(html_to_text(F.col("html")).alias("text")))
     assert "ArrowEvalPython" in plan  # vectorized, not BatchEvalPython
 
 

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -233,8 +234,10 @@ def test_staged_resume_idempotent(spark, tmp_path):
     # resume: completed stage is skipped entirely
     out2 = runner.run_stage("s1", build, ["k"])
     assert out2.count() == 10 and calls["n"] == 1
-    # force re-run converges to the same checksum (idempotence)
-    runner.run_stage("s1", build, ["k"], force=True)
+    # a forced re-run (stage dir removed) converges to the same
+    # checksum (idempotence)
+    shutil.rmtree(tmp_path / "s1")
+    runner.run_stage("s1", build, ["k"])
     c2 = runner.lineage("s1")
     assert c1["checksum"] == c2["checksum"] and c1["n_rows"] == c2["n_rows"]
 
@@ -340,7 +343,8 @@ def test_rebuilt_upstream_invalidates_downstream_stages(spark, tmp_path, monkeyp
         "text", F.when(F.col("doc_id") % 2 == 0, F.lit("")).otherwise(F.col("text"))
     ).write.parquet(blanked_path)
     blanked = lambda: spark.read.parquet(blanked_path)  # noqa: E731
-    runner.run_stage("extract", blanked, ["url"], force=True)
+    shutil.rmtree(os.path.join(workdir, "extract"))
+    runner.run_stage("extract", blanked, ["url"])
     assert runner.lineage("extract")["checksum"] != before["extract"]
 
     def content(table):  # (checksum, n_rows), independent of column order

@@ -28,7 +28,7 @@ def test_spark_submit_pyfiles_end_to_end_and_resume(tmp_path):
     zip_path = os.path.join(REPO, zip_rel)
     env = dict(os.environ, PYSPARK_PYTHON=sys.executable)
 
-    def submit():
+    def submit(*extra):
         out = subprocess.run(
             [
                 "spark-submit",
@@ -43,6 +43,7 @@ def test_spark_submit_pyfiles_end_to_end_and_resume(tmp_path):
                 str(tmp_path / "wh"),
                 "--shuffle-partitions",
                 "8",
+                *extra,
             ],
             capture_output=True,
             text=True,
@@ -54,7 +55,11 @@ def test_spark_submit_pyfiles_end_to_end_and_resume(tmp_path):
         line = [l for l in out.stdout.splitlines() if l.startswith('{"status"')][-1]
         return json.loads(line)
 
-    first = submit()
+    # a checkpoint dir makes the CC loop checkpoint reliably into it
+    # (setCheckpointDir makes <dir>/<uuid>/; each checkpoint an rdd-<id>/)
+    ckpt = tmp_path / "ckpt"
+    first = submit("--checkpoint-dir", str(ckpt))
+    assert list(ckpt.glob("*/rdd-*"))
     assert first["rows"]["triples"] > 0
     assert first["rows"]["docs"] > 0
     # re-submit resumes (checksum-verified skip) and converges to the
