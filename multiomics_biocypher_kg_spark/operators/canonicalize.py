@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from multiomics_biocypher_kg_spark.plans.tuning import (
@@ -88,11 +88,13 @@ def connected_components(
     # ``edges`` is itself a pipeline (the dedup-cluster path feeds
     # verified LSH pairs in) the whole upstream DAG would re-run
     # every round. One checkpoint job up front, O(rounds) saved.
-    und = ckpt(und)
+    # Its row count is observed on that job: no count job.
+    und_rows = Observation()
+    und = ckpt(und.observe(und_rows, F.count(F.lit(1)).alias("n")))
     # round-state exchanges sized by the MATERIALIZED edge count
     # (plans.tuning): the label/frontier tables the loop shuffles are
-    # bounded by it, and the count is a cached-block scan.
-    with scoped_shuffle_partitions(spark, scaled_partitions(spark, und.count())):
+    # bounded by it.
+    with scoped_shuffle_partitions(spark, scaled_partitions(spark, und_rows.get["n"])):
         # fused init = the first propagation round: label(v) = min(v, N(v))
         # in the same agg that enumerates the nodes — saves one full
         # checkpoint job vs initializing to the identity labeling.
@@ -105,9 +107,9 @@ def connected_components(
         # ever decrease), so convergence = no node's label shrank this
         # round. The OLD label rides through the same min() aggregation
         # as a side column (each node contributes exactly one non-null
-        # old_comp, from its own-label branch), so the probe is a filter
-        # count over the freshly checkpointed frame — a cached-block
-        # scan, not the former per-round join job. With the pointer
+        # old_comp, from its own-label branch), so the probe is a count
+        # observed on the round's checkpoint job — no job of its own,
+        # under either checkpoint mode. With the pointer
         # jump, shallow graphs (the same-as case) converge in 1-2 rounds,
         # so probing EVERY round ends the loop at the earliest fixed
         # point.
@@ -161,8 +163,14 @@ def connected_components(
                     F.min("old_comp").alias("old_comp"),
                 )
             )
-            ck = ckpt(new_labels)
-            changed = ck.where(F.col("component") != F.col("old_comp")).count()
+            shrank = Observation()
+            ck = ckpt(
+                new_labels.observe(
+                    shrank,
+                    F.count_if(F.col("component") != F.col("old_comp")).alias("n"),
+                )
+            )
+            changed = shrank.get["n"]
             labels = ck.select("node", "component")
             if changed == 0:
                 break

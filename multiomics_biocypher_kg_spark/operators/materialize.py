@@ -10,10 +10,11 @@ Mirrors the reference's BioCypher emission + import-time hygiene:
 - referential integrity: edges whose subj/obj is not a known node
   are dropped via leftsemi joins (skip_bad_relationships, :14).
 
-Sink: parquet stage tables (the Iceberg tables of the design; without
-Iceberg jars ``merge_into`` emulates MERGE INTO by appending the keys
-the table lacks, preserving the exactly-once resume semantics of the
-north rule).
+Sinks: parquet stage tables (the Iceberg tables of the design). The
+batch build writes each stage table once (``plans.lineage``); the
+incremental ingest is the only sink of ``merge_into``, which, without
+Iceberg jars, emulates MERGE INTO by appending the keys the table
+lacks, preserving the exactly-once resume semantics of the north rule.
 """
 
 from __future__ import annotations

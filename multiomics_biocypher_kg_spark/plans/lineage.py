@@ -7,16 +7,19 @@ Replaces the reference's mtime-based freshness checks
 and its Schema_info build-stamp node
 (/root/reference/scripts/post-import.cypher:1361-1375) with:
 
-- ``lineage_rows``: one row per (stage, spark partition) with row
-  count and an order-insensitive content checksum (the sum of row
-  hashes mod 2^63, computable distributed, no collect),
+- ``write_stage``: writes a stage table in ONE Spark action and takes
+  its lineage from that action: the row count and an
+  order-insensitive content checksum (the sum of row hashes mod 2^63)
+  observed on the write, plus one split entry per data file (name,
+  bytes, row count from the parquet footer) — the shape of an Iceberg
+  manifest (https://iceberg.apache.org/spec/#manifests),
 - ``StagedRunner``: runs the DAG stage by stage; each stage writes a
   parquet stage table + its lineage; a re-run with an existing,
   checksum-matching stage table whose upstream stages still hold the
   content it was built from is a no-op (resume); any other run
-  removes the stage and writes a full build into the empty dir
-  through merge_into (dedup on the stage keys, then an append — the
-  MERGE INTO emulation; on Iceberg this is the real statement).
+  removes the stage and writes a full build into the empty dir. Every
+  stage build emits unique keys, so the write needs no dedup;
+  ``merge_into`` (insert-if-absent) is the incremental ingest's sink.
 """
 
 from __future__ import annotations
@@ -28,11 +31,13 @@ import time
 from collections.abc import Callable, Sequence
 from decimal import Decimal
 
+import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from multiomics_biocypher_kg_spark.operators.materialize import merge_into
+# not called here: perfbench's _targets() and ResumeVerify.op read it
+from multiomics_biocypher_kg_spark.operators.materialize import merge_into  # noqa: F401
 
 CHECKSUM_MOD = 2**63
 # A sum of at most 2^63 terms, each below 2^63, stays below 2^126 < 10^38.
@@ -69,9 +74,10 @@ def content_checksum(df: DataFrame) -> tuple[int, int]:
 
 
 def lineage_rows(df: DataFrame, stage: str) -> DataFrame:
-    """Per-spark-partition lineage: (stage, partition_id, n_rows,
-    checksum) — the 'source split' accounting of the north rule. The
-    partition checksums sum, mod 2^63, to ``content_checksum``."""
+    """Per-spark-partition lineage of any frame: (stage, partition_id,
+    n_rows, checksum). The partition checksums sum, mod 2^63, to
+    ``content_checksum``. A stage table records its splits per data
+    file instead (``write_stage``)."""
     return (
         df.select(F.spark_partition_id().alias("_pid"), _row_term(df).alias("_t"))
         .groupBy("_pid")
@@ -83,6 +89,45 @@ def lineage_rows(df: DataFrame, stage: str) -> DataFrame:
             "checksum",
         )
     )
+
+
+def _data_files(path: str) -> list[str]:
+    """The table's data files, as Spark lists them (no ``_``/``.``
+    prefix: ``_SUCCESS``, ``.crc`` and ``_temporary`` are skipped)."""
+    return sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
+
+
+def write_stage(df: DataFrame, path: str) -> dict:
+    """Write ``df`` as parquet at ``path`` in one Spark action whose
+    observation yields the table's (checksum, n_rows), equal to
+    ``content_checksum`` of the written table.
+
+    The observation sits on top of ``df``'s plan, above every
+    exchange, so it runs in the write's result stage, where Spark
+    applies each task's metric update once even if the task is
+    retried. The per-file row counts come from the parquet footers,
+    read on the driver with no Spark job.
+
+    -> {"checksum", "n_rows", "files": [{"file", "bytes", "n_rows"}]}
+    """
+    obs = Observation()
+    df.observe(
+        obs, modsum(_row_term(df)).alias("checksum"), F.count(F.lit(1)).alias("n_rows")
+    ).write.parquet(path)
+    metrics = obs.get
+    files = [
+        {
+            "file": f,
+            "bytes": os.path.getsize(os.path.join(path, f)),
+            "n_rows": pq.ParquetFile(os.path.join(path, f)).metadata.num_rows,
+        }
+        for f in _data_files(path)
+    ]
+    return {
+        "checksum": int(metrics["checksum"] or 0),
+        "n_rows": int(metrics["n_rows"]),
+        "files": files,
+    }
 
 
 class StagedRunner:
@@ -104,12 +149,16 @@ class StagedRunner:
     def is_complete(self, stage: str) -> bool:
         """A stage is complete only when its data AND lineage exist,
         every upstream stage still records the checksum this stage was
-        built from, AND the recorded checksum matches a recompute over
-        the stage table — a half-written or tampered table, or one
-        built from a since-rebuilt upstream, re-runs instead of
-        resuming. The upstream comparison reads lineage.json files
-        only; the recompute costs one aggregation job per resumed
-        stage."""
+        built from, the stage dir lists exactly the recorded data files
+        with their recorded sizes, AND the recorded checksum matches a
+        recompute over the stage table — a half-written or tampered
+        table, or one built from a since-rebuilt upstream, re-runs
+        instead of resuming. The upstream and file-list comparisons
+        read lineage.json and the directory listing only (a lost,
+        added or resized file fails with no Spark job); the recompute,
+        the authority for a resume, costs one aggregation job per
+        resumed stage. A wrong record can only cause a rebuild, never
+        a wrong resume."""
         data, lin = self._paths(stage)
         if not (os.path.isdir(data) and os.path.isfile(lin)):
             return False
@@ -119,6 +168,9 @@ class StagedRunner:
                 self.lineage(up)["checksum"] != checksum
                 for up, checksum in recorded.get("upstream", {}).items()
             ):
+                return False
+            listed = {f: os.path.getsize(os.path.join(data, f)) for f in _data_files(data)}
+            if listed != {p["file"]: p["bytes"] for p in recorded["partitions"]}:
                 return False
             table = self.spark.read.parquet(data)
         except (OSError, ValueError, KeyError, AnalysisException):
@@ -133,19 +185,21 @@ class StagedRunner:
         self,
         stage: str,
         build: Callable[[], DataFrame],
-        keys: list[str],
         upstream: Sequence[str] = (),
     ) -> DataFrame:
         """Run (or resume) one stage. If the stage is complete (see
         ``is_complete``), the build is skipped entirely (resume); else
-        ``build`` returns the stage's whole content, written via
-        merge_into on ``keys`` into the emptied stage dir — no row of
-        an earlier build survives, and a crash before lineage.json is
-        written leaves no lineage, so re-running a crashed, tampered
-        or invalidated stage converges to the same table. The
-        checksums of the ``upstream`` stages are recorded with the
-        stage's lineage, so rebuilding one of them with new content
-        invalidates this stage."""
+        ``build`` returns the stage's whole content, with unique keys,
+        written by one ``write_stage`` action into the emptied stage
+        dir — no row of an earlier build survives, and a crash before
+        lineage.json is written leaves no lineage, so re-running a
+        crashed, tampered or invalidated stage converges to the same
+        table. lineage.json takes the write's observed (checksum,
+        n_rows) and its per-file splits as ``partitions``; the
+        checksums of the ``upstream`` stages are recorded with it, so
+        rebuilding one of them with new content invalidates this
+        stage. Returns the written table, read with the build's schema
+        (no inference job)."""
         data, lin = self._paths(stage)
         if self.is_complete(stage):
             return self.spark.read.parquet(data)
@@ -153,10 +207,7 @@ class StagedRunner:
         df = build()
         # a full build into an empty dir, with no lineage.json until done
         shutil.rmtree(os.path.dirname(data), ignore_errors=True)
-        merge_into(self.spark, data, df, keys)
-        out = self.spark.read.parquet(data)
-        # one scan: the stage totals are the partition rows' sums
-        per_part = [r.asDict() for r in lineage_rows(out, stage).collect()]
+        written = write_stage(df, data)
         # write-then-rename: lineage.json appears atomically, so a
         # crash mid-dump leaves no torn file behind
         tmp = lin + ".tmp"
@@ -164,17 +215,17 @@ class StagedRunner:
             json.dump(
                 {
                     "stage": stage,
-                    "n_rows": sum(p["n_rows"] for p in per_part),
-                    "checksum": sum(p["checksum"] for p in per_part) % CHECKSUM_MOD,
+                    "n_rows": written["n_rows"],
+                    "checksum": written["checksum"],
                     "upstream": upstream_checksums,
                     "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                    "partitions": per_part,
+                    "partitions": written["files"],
                 },
                 f,
                 indent=1,
             )
         os.replace(tmp, lin)
-        return out
+        return self.spark.read.schema(df.schema).parquet(data)
 
     def lineage(self, stage: str) -> dict:
         _, lin = self._paths(stage)

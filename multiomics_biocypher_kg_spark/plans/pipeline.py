@@ -3,12 +3,13 @@
 extract -> mention -> link -> canonicalize -> materialize -> enrich
 (SURVEY.md §7.1). ``STAGES`` lists the stage tables in run order;
 each ``Stage`` names its upstream stages, a pure DataFrame build over
-the build's ``Sources`` and the upstream frames, and the merge keys
+the build's ``Sources`` and the upstream frames, and the unique key
 of its table (mention is a step inside the link stage, not a table).
 Every entry point of the DAG walks this one list:
 
 - ``run_staged`` persists each stage as a parquet stage table with
-  lineage (the Iceberg-layout stand-in). Each build reads the tables
+  lineage (the Iceberg-layout stand-in), written once with no dedup:
+  every build emits unique keys. Each build reads the tables
   its upstream stages just wrote or resumed, so no plan runs twice,
   and a resumed stage builds nothing (a resumed canonicalize runs no
   connected-components loop).
@@ -125,7 +126,11 @@ class Stage:
     output: str  # key of the stage's frame in build_graph / run_staged
     upstream: tuple[str, ...]
     build: Callable[..., DataFrame]  # (sources, *upstream frames) -> frame
-    keys: tuple[str, ...]  # merge keys of the stage table
+    # unique key of the stage table, guaranteed by the build (no dedup
+    # on write): extract's url = url_of(doc_id); link's (url, pos);
+    # canonicalize and enrich end in a groupBy on it; materialize's
+    # edge_id = subj|pred|obj over two distinct triple sets
+    keys: tuple[str, ...]
 
 
 STAGES = (
@@ -177,8 +182,6 @@ def run_staged(spark: SparkSession, sf_dir: str, workdir: str) -> dict[str, Data
     runner = StagedRunner(spark, workdir)
     tables = _walk(
         Sources(spark, sf_dir),
-        lambda stage, thunk: runner.run_stage(
-            stage.name, thunk, list(stage.keys), upstream=stage.upstream
-        ),
+        lambda stage, thunk: runner.run_stage(stage.name, thunk, upstream=stage.upstream),
     )
     return {stage.output: tables[stage.name] for stage in STAGES}

@@ -67,7 +67,12 @@ def scaled_partitions(spark: SparkSession, n_rows: int) -> int:
 @contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int):
     """Run the body with ``spark.sql.shuffle.partitions = n``;
-    restore the previous value afterwards (exception-safe)."""
+    restore the previous value afterwards (exception-safe).
+
+    Assumes one driver thread plans against the session: the setting
+    is session-global, so a query planned concurrently from another
+    thread on the same session would pick up the scoped value. Run
+    concurrent loops on separate sessions (``spark.newSession()``)."""
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, str(int(n)))

@@ -228,16 +228,16 @@ def test_staged_resume_idempotent(spark, tmp_path):
         )
 
     runner = StagedRunner(spark, str(tmp_path))
-    out1 = runner.run_stage("s1", build, ["k"])
+    out1 = runner.run_stage("s1", build)
     c1 = runner.lineage("s1")
     assert out1.count() == 10 and calls["n"] == 1
     # resume: completed stage is skipped entirely
-    out2 = runner.run_stage("s1", build, ["k"])
+    out2 = runner.run_stage("s1", build)
     assert out2.count() == 10 and calls["n"] == 1
     # a forced re-run (stage dir removed) converges to the same
     # checksum (idempotence)
     shutil.rmtree(tmp_path / "s1")
-    runner.run_stage("s1", build, ["k"])
+    runner.run_stage("s1", build)
     c2 = runner.lineage("s1")
     assert c1["checksum"] == c2["checksum"] and c1["n_rows"] == c2["n_rows"]
 
@@ -308,9 +308,9 @@ def test_checksum_value_unchanged_and_partition_rows_sum_to_it(spark):
 
 
 def test_staged_tables_match_build_graph(spark, tmp_path):
-    """Chaining the stages through their own tables (merge_into dedups
-    each upstream on its keys) leaves every table's content equal to
-    the lazy build_graph frame it stands for."""
+    """Chaining the stages through their own tables leaves every
+    table's content equal to the lazy build_graph frame it stands
+    for."""
     from multiomics_biocypher_kg_spark.plans.lineage import content_checksum
     from multiomics_biocypher_kg_spark.plans.pipeline import build_graph, run_staged
 
@@ -344,14 +344,14 @@ def test_rebuilt_upstream_invalidates_downstream_stages(spark, tmp_path, monkeyp
     ).write.parquet(blanked_path)
     blanked = lambda: spark.read.parquet(blanked_path)  # noqa: E731
     shutil.rmtree(os.path.join(workdir, "extract"))
-    runner.run_stage("extract", blanked, ["url"])
+    runner.run_stage("extract", blanked)
     assert runner.lineage("extract")["checksum"] != before["extract"]
 
     def content(table):  # (checksum, n_rows), independent of column order
         return lineage.content_checksum(table.select(*sorted(table.columns)))
 
     # the reference: a fresh staged build over the same rebuilt extract
-    lineage.StagedRunner(spark, fresh).run_stage("extract", blanked, ["url"])
+    lineage.StagedRunner(spark, fresh).run_stage("extract", blanked)
     expected = {
         key: content(table)
         for key, table in pipeline.run_staged(spark, SF_TINY, fresh).items()
@@ -365,17 +365,17 @@ def test_rebuilt_upstream_invalidates_downstream_stages(spark, tmp_path, monkeyp
         assert not runner.is_complete("link")
 
     rebuilt = []
-    real_merge = lineage.merge_into
+    real_write = lineage.write_stage
 
-    def recording_merge(spark_, target_path, *a, **kw):
-        rebuilt.append(os.path.basename(os.path.dirname(target_path)))
-        return real_merge(spark_, target_path, *a, **kw)
+    def recording_merge(df, path):
+        rebuilt.append(os.path.basename(os.path.dirname(path)))
+        return real_write(df, path)
 
     def no_cc(*a, **kw):
         raise AssertionError("a resumed canonicalize must not run connected components")
 
     with monkeypatch.context() as m:
-        m.setattr(lineage, "merge_into", recording_merge)
+        m.setattr(lineage, "write_stage", recording_merge)
         m.setattr(pipeline, "canonical_mapping", no_cc)
         tables = pipeline.run_staged(spark, SF_TINY, workdir)
         assert rebuilt == ["link", "materialize", "enrich"]
@@ -393,10 +393,11 @@ def test_rebuilt_upstream_invalidates_downstream_stages(spark, tmp_path, monkeyp
 
 
 def test_run_stage_faults_converge_to_the_clean_tables(spark, tmp_path, monkeypatch):
-    """Two faults of a stage write, each repaired by the next plain
+    """Three faults of a stage write, each repaired by the next plain
     run_staged to the clean build's (checksum, n_rows) per stage: a
-    merge that commits part of the stage's files and then dies, and a
-    part file lost under an intact lineage.json."""
+    write that commits part of the stage's rows and then dies, a part
+    file lost under an intact lineage.json, and an extra part file,
+    which the recorded file list rejects before any Spark job."""
     from multiomics_biocypher_kg_spark.plans import lineage, pipeline
 
     workdir = str(tmp_path)
@@ -413,16 +414,16 @@ def test_run_stage_faults_converge_to_the_clean_tables(spark, tmp_path, monkeypa
     stage_dir = os.path.join(workdir, "materialize")
     data = os.path.join(stage_dir, "data")
 
-    # 1. the rebuild's merge commits half the rows, then the run dies
+    # 1. the rebuild's write commits half the rows, then the run dies
     os.remove(os.path.join(stage_dir, "lineage.json"))
-    real_merge = lineage.merge_into
+    real_write = lineage.write_stage
 
-    def crashing_merge(spark_, target_path, updates, keys, *a, **kw):
-        real_merge(spark_, target_path, updates.where(F.hash(*keys) % 2 == 0), keys)
+    def crashing_merge(df, path):
+        real_write(df.where(F.hash("edge_id") % 2 == 0), path)
         raise RuntimeError("killed mid-commit")
 
     with monkeypatch.context() as m:
-        m.setattr(lineage, "merge_into", crashing_merge)
+        m.setattr(lineage, "write_stage", crashing_merge)
         with pytest.raises(RuntimeError, match="killed mid-commit"):
             pipeline.run_staged(spark, SF_TINY, workdir)
     assert any(f.endswith(".parquet") for f in os.listdir(data))
@@ -440,3 +441,147 @@ def test_run_stage_faults_converge_to_the_clean_tables(spark, tmp_path, monkeypa
     tables = pipeline.run_staged(spark, SF_TINY, workdir)
     assert recorded() == clean
     assert lineage.content_checksum(tables["triples"]) == clean["materialize"]
+
+    # 3. a part file is copied under a new name: the listing no longer
+    # matches the recorded files, decided with no checksum job
+    part = next(f for f in sorted(os.listdir(data)) if f.endswith(".parquet"))
+    shutil.copy(os.path.join(data, part), os.path.join(data, "part-copy-" + part))
+
+    def no_spark_job(*a, **kw):
+        raise AssertionError("a changed file set must be decided from the listing")
+
+    with monkeypatch.context() as m:
+        m.setattr(lineage, "content_checksum", no_spark_job)
+        assert not runner.is_complete("materialize")
+    tables = pipeline.run_staged(spark, SF_TINY, workdir)
+    assert recorded() == clean
+    assert lineage.content_checksum(tables["triples"]) == clean["materialize"]
+
+
+def test_stage_tables_have_unique_keys_and_recorded_checksums(spark, tmp_path):
+    """The stage builds emit unique keys, so the stage write needs no
+    dedup: on SF_TINY every STAGES table has as many rows as distinct
+    ``Stage.keys``, and every checksum that lineage.json records from
+    the write equals a recompute over the written table."""
+    from multiomics_biocypher_kg_spark.plans import lineage, pipeline
+
+    tables = pipeline.run_staged(spark, SF_TINY, str(tmp_path))
+    runner = lineage.StagedRunner(spark, str(tmp_path))
+    for stage in pipeline.STAGES:
+        table, rec = tables[stage.output], runner.lineage(stage.name)
+        n = table.count()
+        assert n > 0 and table.select(*stage.keys).distinct().count() == n, stage.name
+        assert lineage.content_checksum(table) == (rec["checksum"], rec["n_rows"]), stage.name
+        assert sum(p["n_rows"] for p in rec["partitions"]) == n, stage.name
+
+
+def test_materialize_edge_id_unique_over_urls_with_pipes(spark):
+    """``edge_id = subj|pred|obj`` stays unique when a url contains
+    ``|``: the materialize build keeps every distinct triple, each
+    under its own edge_id. The one collision left is a value that
+    itself contains ``|mentions|`` or ``|same_as_canonical|`` (subj
+    ``a|mentions|b`` with obj ``c`` and subj ``a`` with obj
+    ``b|mentions|c`` share an edge_id). Before the stage write dropped
+    its dedup, such a collision dropped one triple silently; now both
+    rows are kept."""
+    from multiomics_biocypher_kg_spark.plans.pipeline import _materialize
+
+    links = spark.createDataFrame(
+        [
+            ("http://a.org/x|y", "kw:1"),
+            ("http://a.org/x", "kw:1"),
+            ("http://a.org/x|y|z", "kw:2"),
+            ("http://a.org/x|y", "kw:2"),
+            ("http://a.org/x|y", "kw:2"),
+            ("|", "kw:1"),
+            ("||", "kw:1"),
+            ("http://a.org/x", None),
+        ],
+        "url string, entity_id string",
+    )
+    mapping = spark.createDataFrame(
+        [("ent:1|a", "ent:0", "false"), ("ent:1", "ent:0|a", "false"), ("ent:0", "ent:0", "false")],
+        "entity_id string, canonical_id string, is_conflict string",
+    )
+    triples = _materialize(None, links, mapping)
+    rows = triples.collect()
+    assert len(rows) == 8
+    assert len({r.edge_id for r in rows}) == len(rows)
+    assert len({(r.subj, r.pred, r.obj) for r in rows}) == len(rows)
+
+
+_RETRY_SCRIPT = r"""
+import json, os, sys
+from pyspark import TaskContext
+from pyspark.sql import SparkSession, functions as F
+from multiomics_biocypher_kg_spark.plans import lineage
+
+marker, workdir = sys.argv[1], sys.argv[2]
+spark = (
+    SparkSession.builder.master("local[2,2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.sql.adaptive.enabled", "false")
+    .getOrCreate()
+)
+
+
+seen = {"rows": 0}
+
+
+@F.udf("long")
+def flaky(v):
+    # the first attempt of partition 0 dies after most of its rows
+    # (about 500) have passed the write's observation
+    ctx = TaskContext.get()
+    seen["rows"] += 1
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0 and seen["rows"] >= 400:
+        open(marker, "w").close()
+        raise RuntimeError("injected task failure")
+    return v
+
+
+def build():
+    grouped = spark.range(0, 2000, 1, 4).groupBy((F.col("id") % 1000).alias("k")).agg(
+        F.count(F.lit(1)).alias("c")
+    )
+    return grouped.select("k", flaky(F.col("k")).alias("v"), "c")
+
+
+runner = lineage.StagedRunner(spark, workdir)
+table = runner.run_stage("s", build)
+rec = runner.lineage("s")
+print(json.dumps({
+    "recorded": [rec["checksum"], rec["n_rows"]],
+    "table": list(lineage.content_checksum(table)),
+    "files": sum(p["n_rows"] for p in rec["partitions"]),
+}))
+spark.stop()
+"""
+
+
+def test_observed_checksum_survives_a_retried_task(tmp_path):
+    """A write whose result task fails once and is retried still
+    records the checksum of the table it wrote: the observation runs
+    in the write's result stage, where a failed attempt's metric
+    update is dropped. Fresh ``local[2,2]`` session (two attempts per
+    task) in a subprocess."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    marker = tmp_path / "failed-once"
+    env = dict(os.environ, PYSPARK_PYTHON=sys.executable)
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [repo, env.get("PYTHONPATH")]))
+    out = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, str(marker), str(tmp_path / "wd")],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        env=env,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    assert marker.exists()  # the injected failure ran, so a retry did too
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["recorded"] == got["table"]
+    assert got["table"][1] == got["files"] == 1000
