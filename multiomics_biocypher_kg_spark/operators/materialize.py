@@ -13,15 +13,16 @@ Mirrors the reference's BioCypher emission + import-time hygiene:
 Sinks: parquet stage tables (the Iceberg tables of the design). The
 batch build writes each stage table once (``plans.lineage``); the
 incremental ingest is the only sink of ``merge_into``, which, without
-Iceberg jars, emulates MERGE INTO by appending the keys the table
-lacks, preserving the exactly-once resume semantics of the north rule.
+Iceberg jars, emulates an insert-only MERGE INTO by appending the keys
+the table lacks, preserving the exactly-once resume semantics of the
+north rule. The reference's accreting MERGE arms run in one shot as
+``accrete_evidence``.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -122,13 +123,7 @@ def referential_remap(
     )
 
 
-def merge_into_sql_stmt(
-    table: str,
-    updates_view: str,
-    keys: list[str],
-    value_cols: list[str],
-    accrete: list[str] | None = None,
-) -> str:
+def merge_into_sql_stmt(table: str, updates_view: str, keys: list[str]) -> str:
     """Render the REAL ``MERGE INTO`` statement equivalent to
     :func:`merge_into`'s parquet emulation — the statement executed
     verbatim on an Iceberg/Delta catalog table (this sandbox has no
@@ -136,40 +131,27 @@ def merge_into_sql_stmt(
     itself is unit-pinned so the two stay in lockstep):
 
       MERGE INTO t USING u ON <null-safe key equality>
-      [WHEN MATCHED THEN UPDATE SET          -- only with accrete cols
-        accrete cols -> array_union(coalesce both sides)
-        other cols   -> overwrite]
       WHEN NOT MATCHED THEN INSERT *
     """
-    accrete = accrete or []
     on = " AND ".join(f"t.`{k}` <=> u.`{k}`" for k in keys)
-    sets = []
-    for c in value_cols:
-        if c in accrete:
-            sets.append(
-                f"t.`{c}` = array_union(coalesce(t.`{c}`, array()), "
-                f"coalesce(u.`{c}`, array()))"
-            )
-        else:
-            sets.append(f"t.`{c}` = u.`{c}`")
-    update = f" WHEN MATCHED THEN UPDATE SET {', '.join(sets)}" if accrete else ""
     return (
-        f"MERGE INTO {table} t USING {updates_view} u ON {on}"
-        f"{update} WHEN NOT MATCHED THEN INSERT *"
+        f"MERGE INTO {table} t USING {updates_view} u ON {on} "
+        "WHEN NOT MATCHED THEN INSERT *"
     )
 
 
 def accrete_evidence(arms: list[tuple[str, DataFrame]], keys: list[str]) -> DataFrame:
-    """One-shot batch equivalent of folding ``merge_into(...,
-    accrete=['evidence_sources'])`` over evidence arms IN ORDER
-    (post-import.cypher:1052-1094's catalysis/transport/measured
-    MERGE arms): per key, evidence_sources lists each contributing
-    arm once, ordered by the first arm that contributed — exactly
-    what sequential array_union accretion produces.
+    """Multi-arm evidence accretion in one shot, the batch form of the
+    reference's accreting MERGE arms (post-import.cypher:1052-1094's
+    catalysis/transport/measured arms, each ``SET evidence_sources =
+    array_union(...)`` on match): per key, ``evidence_sources`` lists
+    each contributing arm once, ordered by the first arm that
+    contributed — exactly what folding ``array_union`` over the arms
+    IN ORDER produces (pytest-gated against a plain-Python fold).
 
     Scale: distinct per arm (map-side combine) + one (keys, source)
     shuffle + one keys shuffle — no iterative passes over the edge
-    table. The fold-vs-one-shot equivalence is pytest-gated.
+    table.
     """
     if not arms:
         raise ValueError("accrete_evidence: at least one evidence arm required")
@@ -192,84 +174,27 @@ def accrete_evidence(arms: list[tuple[str, DataFrame]], keys: list[str]) -> Data
 
 
 def merge_into(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    keys: list[str],
-    accrete: list[str] | None = None,
+    spark: SparkSession, target_path: str, updates: DataFrame, keys: list[str]
 ) -> None:
-    """Idempotent upsert into a parquet stage table (MERGE INTO
-    emulation; on Iceberg, the ``merge_into_sql_stmt`` statement).
-
-    Without ``accrete``: insert-if-absent. The updates, deduped on
-    ``keys`` and anti-joined against the target's key columns (null
-    keys match null-safely, as ``<=>`` in the statement), are
-    appended as new files. Every caller's key fixes the whole row
-    (``edge_id = subj|pred|obj``), so this equals an upsert, and a
+    """Insert-if-absent into a parquet table (MERGE INTO emulation; on
+    Iceberg, the ``merge_into_sql_stmt`` statement). The updates,
+    deduped on ``keys`` and anti-joined against the target's key
+    columns (null keys match null-safely, as ``<=>`` in the
+    statement), are appended as new files; no file is rewritten. A
+    key that the target already holds keeps the target's row, and a
     re-run appends nothing — the resume primitive of the north rule.
-
-    Columns in ``accrete`` are ARRAY columns that accumulate on match
-    via array_union(existing, update), other columns overwrite (G7/U5,
-    post-import.cypher:1052-1094); onto an existing target this
-    rewrites the table and swaps it in (batch form: accrete_evidence).
     """
     updates = updates.dropDuplicates(keys)
-    if not (accrete and os.path.isdir(target_path)):
-        if os.path.isdir(target_path):
-            # the next job commit here would publish a crashed write's tasks
-            shutil.rmtree(os.path.join(target_path, "_temporary"), ignore_errors=True)
-            # an explicit schema reads a dir with no data file as empty
-            held = spark.read.schema(
-                T.StructType([updates.schema[k] for k in keys])
-            ).parquet(target_path)
-            on = [F.col(f"u.{k}").eqNullSafe(F.col(f"t.{k}")) for k in keys]
-            updates = updates.alias("u").join(held.alias("t"), on, "left_anti")
-        updates.write.mode("append").parquet(target_path)
-        return
-    target = spark.read.parquet(target_path)
-    upd_cols = [c for c in updates.columns if c not in keys]
-    u = updates.select(
-        *keys,
-        F.lit(True).alias("_u_present"),
-        *[F.col(c).alias(f"_u_{c}") for c in upd_cols],
-    )
-    j = target.withColumn("_t_present", F.lit(True)).join(
-        u, keys, "full_outer"
-    )
-    matched = F.col("_t_present").isNotNull() & F.col(
-        "_u_present"
-    ).isNotNull()
-    out_cols = list(keys)
-    all_vals = [c for c in target.columns if c not in keys]
-    for c in upd_cols:
-        if c not in all_vals:
-            all_vals.append(c)
-    for c in all_vals:
-        t_val = F.col(c) if c in target.columns else F.lit(None)
-        u_val = F.col(f"_u_{c}") if c in upd_cols else F.lit(None)
-        if c in accrete:
-            # null-safe union without empty-array literals (keeps
-            # element-type inference intact for any array type)
-            union_val = (
-                F.when(t_val.isNull(), u_val)
-                .when(u_val.isNull(), t_val)
-                .otherwise(F.array_union(t_val, u_val))
-            )
-            merged_val = (
-                F.when(matched, union_val)
-                .when(F.col("_u_present").isNotNull(), u_val)
-                .otherwise(t_val)
-            )
-        else:
-            merged_val = F.when(
-                F.col("_u_present").isNotNull(), u_val
-            ).otherwise(t_val)
-        out_cols.append(merged_val.alias(c))
-    merged = j.select(*out_cols)
-    tmp = f"{target_path}__tmp_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(target_path)
-    os.rename(tmp, target_path)
+    # the next job commit here would publish a crashed write's tasks
+    shutil.rmtree(os.path.join(target_path, "_temporary"), ignore_errors=True)
+    if os.path.isdir(target_path):
+        # an explicit schema reads a dir with no data file as empty
+        held = spark.read.schema(
+            T.StructType([updates.schema[k] for k in keys])
+        ).parquet(target_path)
+        on = [F.col(f"u.{k}").eqNullSafe(F.col(f"t.{k}")) for k in keys]
+        updates = updates.alias("u").join(held.alias("t"), on, "left_anti")
+    updates.write.mode("append").parquet(target_path)
 
 
 def shacl_report(triples: DataFrame) -> DataFrame:

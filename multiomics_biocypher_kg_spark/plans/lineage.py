@@ -35,6 +35,7 @@ import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # not called here: perfbench's _targets() and ResumeVerify.op read it
 from multiomics_biocypher_kg_spark.operators.materialize import merge_into  # noqa: F401
@@ -140,6 +141,8 @@ class StagedRunner:
     def __init__(self, spark: SparkSession, workdir: str):
         self.spark = spark
         self.workdir = workdir
+        # stage -> the table is_complete read and verified, for run_stage
+        self._verified: dict[str, DataFrame] = {}
         os.makedirs(workdir, exist_ok=True)
 
     def _paths(self, stage: str) -> tuple[str, str]:
@@ -155,10 +158,13 @@ class StagedRunner:
         table, or one built from a since-rebuilt upstream, re-runs
         instead of resuming. The upstream and file-list comparisons
         read lineage.json and the directory listing only (a lost,
-        added or resized file fails with no Spark job); the recompute,
-        the authority for a resume, costs one aggregation job per
-        resumed stage. A wrong record can only cause a rebuild, never
-        a wrong resume."""
+        added or resized file fails with no Spark job); the table is
+        read with the schema lineage.json records (no inference job),
+        and the recompute over it, the authority for a resume, is the
+        only Spark work of a resumed stage. A wrong record can only
+        cause a rebuild, never a wrong resume; a record without a
+        schema rebuilds its stage once."""
+        self._verified.pop(stage, None)
         data, lin = self._paths(stage)
         if not (os.path.isdir(data) and os.path.isfile(lin)):
             return False
@@ -172,14 +178,17 @@ class StagedRunner:
             listed = {f: os.path.getsize(os.path.join(data, f)) for f in _data_files(data)}
             if listed != {p["file"]: p["bytes"] for p in recorded["partitions"]}:
                 return False
-            table = self.spark.read.parquet(data)
+            schema = T.StructType.fromJson(json.loads(recorded["schema"]))
+            table = self.spark.read.schema(schema).parquet(data)
         except (OSError, ValueError, KeyError, AnalysisException):
             # torn/corrupt lineage.json, a missing upstream or a table
             # with no data file -> rebuild, never raise: the documented
             # 'half-written stage re-runs' contract
             return False
-        checksum, n = content_checksum(table)
-        return checksum == recorded.get("checksum") and n == recorded.get("n_rows")
+        if content_checksum(table) != (recorded.get("checksum"), recorded.get("n_rows")):
+            return False
+        self._verified[stage] = table
+        return True
 
     def run_stage(
         self,
@@ -198,11 +207,12 @@ class StagedRunner:
         n_rows) and its per-file splits as ``partitions``; the
         checksums of the ``upstream`` stages are recorded with it, so
         rebuilding one of them with new content invalidates this
-        stage. Returns the written table, read with the build's schema
-        (no inference job)."""
+        stage, and so is the build's schema, which both the returned
+        table and a later resume read with (no inference job). A
+        resumed stage returns the table ``is_complete`` verified."""
         data, lin = self._paths(stage)
         if self.is_complete(stage):
-            return self.spark.read.parquet(data)
+            return self._verified.pop(stage)
         upstream_checksums = {up: self.lineage(up)["checksum"] for up in upstream}
         df = build()
         # a full build into an empty dir, with no lineage.json until done
@@ -218,6 +228,7 @@ class StagedRunner:
                     "n_rows": written["n_rows"],
                     "checksum": written["checksum"],
                     "upstream": upstream_checksums,
+                    "schema": df.schema.json(),
                     "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                     "partitions": written["files"],
                 },

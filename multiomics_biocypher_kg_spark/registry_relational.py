@@ -806,8 +806,8 @@ def kg_evidence_accretion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (post-import.cypher:1052-1094,1271-1288) — three MERGE arms
     (metabolism/transport/measured analogs) accrete evidence_sources
     per entity in arm order, each source recorded once. One-shot
-    batch form; the incremental merge_into(accrete=...) fold is
-    asserted equal in tests/test_materialize_lineage.py."""
+    batch form; tests/test_materialize_lineage.py asserts it equal to
+    a plain-Python array_union fold over the arms."""
     from multiomics_biocypher_kg_spark.operators.materialize import accrete_evidence
 
     ev = _read(spark, sf_dir, "events")

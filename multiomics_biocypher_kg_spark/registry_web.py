@@ -720,9 +720,9 @@ def kg_comention_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy (collect_set), pairs explode narrowly from the sorted
     array (no per-doc self-join shuffle), and the final per-edge
     aggregation is the second and last shuffle. ``merge_op`` is the
-    WHEN [NOT] MATCHED branch operators.materialize.merge_into would
-    take per row (insert / update = accrete evidence counts /
-    unchanged). At 100 TB hot entities skew the pair key — same
+    WHEN [NOT] MATCHED branch a MERGE INTO with an accreting update
+    arm would take per row (insert / update = accrete evidence counts
+    / unchanged). At 100 TB hot entities skew the pair key — same
     salting recipe as kg_host_rollup_salted applies to the final agg.
     """
     from multiomics_biocypher_kg_spark.operators.graphstats import comention_pairs

@@ -4,12 +4,14 @@ Settings chosen for the 100 TB design point (and scaled down
 automatically for local testing):
 
 - AQE on (runtime coalesce + skew-join splitting): hot hosts /
-  hot entities are expected in web corpora, and AQE's skew handling
-  plus explicit salting in ``operators.canonicalize`` is the plan.
+  hot entities are expected in web corpora, and AQE's skew-join
+  splitting is what handles them.
 - ``spark.sql.shuffle.partitions`` defaults to the session core
   count locally; on a real cluster this is set to 2-3x total cores
   via spark-submit conf.
-- Arrow enabled: the extract / mention UDFs are pandas UDFs.
+- Arrow enabled for the pandas UDFs that remain (phrase mentions,
+  the ``html_to_text`` reference); extract and ``mentions_tokens``
+  are native Column programs.
 - Session timezone pinned to UTC so results compare bit-for-bit
   against the DuckDB oracle (naive-UTC timestamps).
 """

@@ -5,11 +5,13 @@ stage builds as the batch pipeline (``plans.pipeline.compose``
 through link: pages synth -> extract -> mention -> link are all
 stateless column programs, so they compose with a streaming frame
 unchanged); the sink is ``foreachBatch`` into the MERGE INTO
-emulation keyed by edge_id, which appends only the edge ids the
-table lacks and rewrites no file — so a re-delivered or retried
-micro-batch appends nothing and the triple table converges
-exactly-once in content terms (the same resume primitive the batch
-StagedRunner uses; on Iceberg this is a real MERGE INTO per batch).
+emulation keyed by edge_id (``operators.materialize.merge_into``),
+which appends only the edge ids the table lacks and rewrites no file
+— so a re-delivered or retried micro-batch appends nothing and the
+triple table converges exactly-once in content terms (on Iceberg
+this is a real MERGE INTO per batch). The batch StagedRunner does
+not merge: it writes each stage table whole and resumes it by
+checksum (``plans.lineage``).
 
 Scale notes: per-batch work is the batch plan (broadcast link joins,
 no shuffle of the mention stream); the merge anti-joins on the

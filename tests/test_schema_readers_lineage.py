@@ -475,6 +475,46 @@ def test_stage_tables_have_unique_keys_and_recorded_checksums(spark, tmp_path):
         assert sum(p["n_rows"] for p in rec["partitions"]) == n, stage.name
 
 
+def test_resume_reads_each_stage_table_once(spark, tmp_path):
+    """A fully resumed run_staged reads each stage table once, with
+    the schema lineage.json records: no schema-inference job and no
+    second read, so its only Spark jobs are the checksum recomputes
+    (at most two per stage). Every returned table holds the content
+    lineage.json records."""
+    from multiomics_biocypher_kg_spark.plans import lineage, pipeline
+
+    workdir = str(tmp_path)
+    pipeline.run_staged(spark, SF_TINY, workdir)
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = [sc.getLocalProperty(k) for k in props]
+    sc.setJobGroup("resume-once", "fully resumed run_staged")
+    try:
+        tables = pipeline.run_staged(spark, SF_TINY, workdir)
+    finally:
+        for k, v in zip(props, saved):
+            sc.setLocalProperty(k, v)
+    jobs = sc.statusTracker().getJobIdsForGroup("resume-once")
+    assert len(jobs) <= 2 * len(pipeline.STAGES), len(jobs)
+    runner = lineage.StagedRunner(spark, workdir)
+    for stage in pipeline.STAGES:
+        rec = runner.lineage(stage.name)
+        assert lineage.content_checksum(tables[stage.output]) == (
+            rec["checksum"], rec["n_rows"],
+        ), stage.name
+
+    # a record without a schema rebuilds its stage once, to the same content
+    enrich = runner.lineage("enrich")
+    with open(os.path.join(workdir, "enrich", "lineage.json"), "w") as f:
+        json.dump({k: v for k, v in enrich.items() if k != "schema"}, f)
+    assert not runner.is_complete("enrich")
+    pipeline.run_staged(spark, SF_TINY, workdir)
+    rebuilt = runner.lineage("enrich")
+    assert rebuilt["schema"] == enrich["schema"]
+    assert (rebuilt["checksum"], rebuilt["n_rows"]) == (enrich["checksum"], enrich["n_rows"])
+    assert runner.is_complete("enrich")
+
+
 def test_materialize_edge_id_unique_over_urls_with_pipes(spark):
     """``edge_id = subj|pred|obj`` stays unique when a url contains
     ``|``: the materialize build keeps every distinct triple, each
