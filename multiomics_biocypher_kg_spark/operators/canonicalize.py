@@ -33,10 +33,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from multiomics_biocypher_kg_spark.plans.tuning import (
-    scaled_partitions,
-    scoped_shuffle_partitions,
-)
+from multiomics_biocypher_kg_spark.plans.tuning import rerooted, state_session
 
 
 def _ckpt(spark: SparkSession) -> Callable[[DataFrame], DataFrame]:
@@ -93,93 +90,95 @@ def connected_components(
     und = ckpt(und.observe(und_rows, F.count(F.lit(1)).alias("n")))
     # round-state exchanges sized by the MATERIALIZED edge count
     # (plans.tuning): the label/frontier tables the loop shuffles are
-    # bounded by it.
-    with scoped_shuffle_partitions(spark, scaled_partitions(spark, und_rows.get["n"])):
-        # fused init = the first propagation round: label(v) = min(v, N(v))
-        # in the same agg that enumerates the nodes — saves one full
-        # checkpoint job vs initializing to the identity labeling.
-        labels = ckpt(
-            und.groupBy(F.col("a").alias("node")).agg(
-                F.least(F.min("b"), F.col("a")).alias("component")
+    # bounded by it. The rounds run in a child session that holds that
+    # count, so the caller's session, which other driver threads may
+    # plan against meanwhile, keeps its own.
+    und = rerooted(und, state_session(spark, und_rows.get["n"]))
+    # fused init = the first propagation round: label(v) = min(v, N(v))
+    # in the same agg that enumerates the nodes — saves one full
+    # checkpoint job vs initializing to the identity labeling.
+    labels = ckpt(
+        und.groupBy(F.col("a").alias("node")).agg(
+            F.least(F.min("b"), F.col("a")).alias("component")
+        )
+    )
+    # convergence probe: min-label propagation is monotone (labels only
+    # ever decrease), so convergence = no node's label shrank this
+    # round. The OLD label rides through the same min() aggregation
+    # as a side column (each node contributes exactly one non-null
+    # old_comp, from its own-label branch), so the probe is a count
+    # observed on the round's checkpoint job — no job of its own,
+    # under either checkpoint mode. With the pointer
+    # jump, shallow graphs (the same-as case) converge in 1-2 rounds,
+    # so probing EVERY round ends the loop at the earliest fixed
+    # point.
+    comp_type = labels.schema["component"].dataType
+    null_old = F.lit(None).cast(comp_type).alias("old_comp")
+    changed = None
+    for _ in range(max_iter):
+        neighbor = (
+            und.join(labels, und.b == labels.node)
+            .select(und.a.alias("node"), "component", null_old)
+        )
+        own = labels.select(
+            "node", "component", F.col("component").alias("old_comp")
+        )
+        # pointer jump: component-of-component joins INTO the
+        # union feeding the min() agg (same fixed point; keeping
+        # the checkpoint directly after the agg also sidesteps a
+        # Spark 4 localCheckpoint-of-union attribute-rewrite bug)
+        l2 = labels.select(
+            F.col("node").alias("c_node"), F.col("component").alias("c_comp")
+        )
+        jump = (
+            labels.join(l2, labels.component == l2.c_node)
+            .select("node", F.col("c_comp").alias("component"), null_old)
+        )
+        # DOUBLE jump (component^3 per round): one more state-
+        # table join triples effective propagation distance, so
+        # shallow graphs converge a full round earlier — with the
+        # convergence probe that is one fewer join+agg+checkpoint
+        # +probe cycle. Interleaved A/B on the sf1.0 same-as
+        # graph: 3 rounds / 2.19 s -> 2 rounds / 1.80 s (min-of-3).
+        # Same fixed point: jumps only propagate existing labels
+        # along component pointers, min() stays monotone.
+        l3 = labels.select(
+            F.col("node").alias("d_node"), F.col("component").alias("d_comp")
+        )
+        jump2 = (
+            jump.alias("j")
+            .join(l3, F.col("j.component") == F.col("d_node"))
+            .select(
+                F.col("j.node").alias("node"),
+                F.col("d_comp").alias("component"),
+                null_old,
             )
         )
-        # convergence probe: min-label propagation is monotone (labels only
-        # ever decrease), so convergence = no node's label shrank this
-        # round. The OLD label rides through the same min() aggregation
-        # as a side column (each node contributes exactly one non-null
-        # old_comp, from its own-label branch), so the probe is a count
-        # observed on the round's checkpoint job — no job of its own,
-        # under either checkpoint mode. With the pointer
-        # jump, shallow graphs (the same-as case) converge in 1-2 rounds,
-        # so probing EVERY round ends the loop at the earliest fixed
-        # point.
-        comp_type = labels.schema["component"].dataType
-        null_old = F.lit(None).cast(comp_type).alias("old_comp")
-        changed = None
-        for _ in range(max_iter):
-            neighbor = (
-                und.join(labels, und.b == labels.node)
-                .select(und.a.alias("node"), "component", null_old)
+        new_labels = (
+            own.union(neighbor).union(jump).union(jump2)
+            .groupBy("node")
+            .agg(
+                F.min("component").alias("component"),
+                F.min("old_comp").alias("old_comp"),
             )
-            own = labels.select(
-                "node", "component", F.col("component").alias("old_comp")
+        )
+        shrank = Observation()
+        ck = ckpt(
+            new_labels.observe(
+                shrank,
+                F.count_if(F.col("component") != F.col("old_comp")).alias("n"),
             )
-            # pointer jump: component-of-component joins INTO the
-            # union feeding the min() agg (same fixed point; keeping
-            # the checkpoint directly after the agg also sidesteps a
-            # Spark 4 localCheckpoint-of-union attribute-rewrite bug)
-            l2 = labels.select(
-                F.col("node").alias("c_node"), F.col("component").alias("c_comp")
-            )
-            jump = (
-                labels.join(l2, labels.component == l2.c_node)
-                .select("node", F.col("c_comp").alias("component"), null_old)
-            )
-            # DOUBLE jump (component^3 per round): one more state-
-            # table join triples effective propagation distance, so
-            # shallow graphs converge a full round earlier — with the
-            # convergence probe that is one fewer join+agg+checkpoint
-            # +probe cycle. Interleaved A/B on the sf1.0 same-as
-            # graph: 3 rounds / 2.19 s -> 2 rounds / 1.80 s (min-of-3).
-            # Same fixed point: jumps only propagate existing labels
-            # along component pointers, min() stays monotone.
-            l3 = labels.select(
-                F.col("node").alias("d_node"), F.col("component").alias("d_comp")
-            )
-            jump2 = (
-                jump.alias("j")
-                .join(l3, F.col("j.component") == F.col("d_node"))
-                .select(
-                    F.col("j.node").alias("node"),
-                    F.col("d_comp").alias("component"),
-                    null_old,
-                )
-            )
-            new_labels = (
-                own.union(neighbor).union(jump).union(jump2)
-                .groupBy("node")
-                .agg(
-                    F.min("component").alias("component"),
-                    F.min("old_comp").alias("old_comp"),
-                )
-            )
-            shrank = Observation()
-            ck = ckpt(
-                new_labels.observe(
-                    shrank,
-                    F.count_if(F.col("component") != F.col("old_comp")).alias("n"),
-                )
-            )
-            changed = shrank.get["n"]
-            labels = ck.select("node", "component")
-            if changed == 0:
-                break
+        )
+        changed = shrank.get["n"]
+        labels = ck.select("node", "component")
+        if changed == 0:
+            break
     if changed != 0:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             f"({changed} labels still changing) — raise max_iter"
         )
-    return labels
+    return rerooted(labels, spark)
 
 
 def canonical_mapping(

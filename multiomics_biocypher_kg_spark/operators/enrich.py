@@ -109,11 +109,14 @@ def ancestors_closure(
     Round exchanges are sized from the MATERIALIZED closure row
     count each round (plans.tuning): closure state is ontology-
     sized, and per-round eager checkpoints make the count a
-    cached-block scan.
+    cached-block scan. The rounds run in a child session holding that
+    count; the closure comes back in the caller's session.
     """
     from multiomics_biocypher_kg_spark.plans.tuning import (
+        SHUFFLE_PARTITIONS,
+        rerooted,
         scaled_partitions,
-        scoped_shuffle_partitions,
+        state_session,
     )
 
     base = (
@@ -125,8 +128,9 @@ def ancestors_closure(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    closure = base
     n_state = base.count()
+    state = state_session(edges.sparkSession, n_state)
+    closure = rerooted(base, state)
     rounds = max(1, (max_depth - 1).bit_length())  # ceil(log2(max_depth))
     for _ in range(rounds):
         step = (
@@ -139,15 +143,12 @@ def ancestors_closure(
                 (F.col("a.depth") + F.col("b.depth")).alias("depth"),
             )
         )
-        with scoped_shuffle_partitions(
-            edges.sparkSession, scaled_partitions(edges.sparkSession, n_state)
-        ):
-            closure = (
-                closure.union(step)
-                .groupBy("node", "ancestor")
-                .agg(F.min("depth").alias("depth"))
-                .localCheckpoint(eager=True)
-            )
+        closure = (
+            closure.union(step)
+            .groupBy("node", "ancestor")
+            .agg(F.min("depth").alias("depth"))
+            .localCheckpoint(eager=True)
+        )
         new_n = closure.count()
         # fixed-point early exit: squaring only ever ADDS pairs (a
         # pair's min-depth is final the round it first appears), so
@@ -156,7 +157,8 @@ def ancestors_closure(
         if new_n == n_state:
             break
         n_state = new_n
-    return closure
+        state.conf.set(SHUFFLE_PARTITIONS, str(scaled_partitions(state, n_state)))
+    return rerooted(closure, edges.sparkSession)
 
 
 def subtree_rollup(

@@ -558,48 +558,46 @@ def hyperanf_estimates(
     # ``edges`` from scratch — two full corpus scans when the edges
     # come from the link graph. The re-distinct inside the two
     # consumers now runs over this materialized table (trivial).
-    from multiomics_biocypher_kg_spark.plans.tuning import (
-        scaled_partitions,
-        scoped_shuffle_partitions,
-    )
+    from multiomics_biocypher_kg_spark.plans.tuning import rerooted, state_session
 
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
     # every exchange below moves graph-state rows (registers,
     # reach-sets, per-radius estimates) bounded by the materialized
-    # edge/node count, so the whole assembly runs — eagerly — under
-    # the data-sized round partitioning (plans.tuning) and the
-    # finished (|V| x max_h)-row result is returned materialized.
+    # edge/node count, so the whole assembly runs — eagerly — in a
+    # child session holding the data-sized round partitioning
+    # (plans.tuning) and the finished (|V| x max_h)-row result is
+    # returned materialized, in the caller's session.
     # Lazily returned, the ~30-exchange tail would re-plan at the
     # session's corpus-scale partition count at action time.
     spark = edges.sparkSession
-    with scoped_shuffle_partitions(spark, scaled_partitions(spark, e.count())):
-        states = hyperanf_states(e, max_h, k_trials, modulus)
-        e_ns = e.where(F.col("src") != F.col("dst"))
-        exact = hop_neighborhoods(e_ns, max_h=max_h)
-        nodes = states[0].select("node").distinct()
-        parts = []
-        for h, state in enumerate(states, start=1):
-            s = state.groupBy("node").agg(F.sum("m").alias("s"))
-            est = (
-                F.lit(float(k_trials - 1)) * modulus / F.greatest(F.col("s"), F.lit(1))
-                - 1
+    e = rerooted(e, state_session(spark, e.count()))
+    states = hyperanf_states(e, max_h, k_trials, modulus)
+    e_ns = e.where(F.col("src") != F.col("dst"))
+    exact = hop_neighborhoods(e_ns, max_h=max_h)
+    nodes = states[0].select("node").distinct()
+    parts = []
+    for h, state in enumerate(states, start=1):
+        s = state.groupBy("node").agg(F.sum("m").alias("s"))
+        est = (
+            F.lit(float(k_trials - 1)) * modulus / F.greatest(F.col("s"), F.lit(1))
+            - 1
+        )
+        n_exact = F.coalesce(F.col(f"n{h}"), F.lit(0)) + 1
+        parts.append(
+            s.join(nodes, "node")
+            .join(exact.select("node", f"n{h}"), "node", "left")
+            .select(
+                "node",
+                F.lit(h).cast("int").alias("h"),
+                n_exact.cast("long").alias("n_exact"),
+                F.round(est, 6).alias("n_est"),
+                F.round(F.abs(est - n_exact) / n_exact, 6).alias("rel_err"),
             )
-            n_exact = F.coalesce(F.col(f"n{h}"), F.lit(0)) + 1
-            parts.append(
-                s.join(nodes, "node")
-                .join(exact.select("node", f"n{h}"), "node", "left")
-                .select(
-                    "node",
-                    F.lit(h).cast("int").alias("h"),
-                    n_exact.cast("long").alias("n_exact"),
-                    F.round(est, 6).alias("n_est"),
-                    F.round(F.abs(est - n_exact) / n_exact, 6).alias("rel_err"),
-                )
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.localCheckpoint(eager=True)
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return rerooted(out.localCheckpoint(eager=True), spark)
 
 
 # ── Weisfeiler–Leman structural roles ────────────────────────────────

@@ -1,18 +1,24 @@
 """End-to-end KG-construction DAG, defined once as ``STAGES``.
 
 extract -> mention -> link -> canonicalize -> materialize -> enrich
-(SURVEY.md §7.1). ``STAGES`` lists the stage tables in run order;
-each ``Stage`` names its upstream stages, a pure DataFrame build over
-the build's ``Sources`` and the upstream frames, and the unique key
-of its table (mention is a step inside the link stage, not a table).
-Every entry point of the DAG walks this one list:
+(SURVEY.md §7.1). ``STAGES`` lists the stage tables in dependency
+order; each ``Stage`` names its upstream stages, a pure DataFrame
+build over the build's ``Sources`` and the upstream frames, and the
+unique key of its table (mention is a step inside the link stage, not
+a table). Every entry point of the DAG walks this one list, and the
+walk runs each stage on a driver thread as soon as its upstream
+stages are done, so independent stages run concurrently: canonicalize
+(no upstream) beside extract -> link, enrich (link only) beside
+materialize.
 
 - ``run_staged`` persists each stage as a parquet stage table with
   lineage (the Iceberg-layout stand-in), written once with no dedup:
   every build emits unique keys. Each build reads the tables
   its upstream stages just wrote or resumed, so no plan runs twice,
   and a resumed stage builds nothing (a resumed canonicalize runs no
-  connected-components loop).
+  connected-components loop). Two stage writes in flight at once keep
+  the cluster busy where one latency-bound stage (the CC loop's small
+  rounds) would leave it idle.
 - ``compose`` chains the builds lazily: ``build_graph`` returns the
   whole DAG, ``registry._pipeline`` and the streaming ingest take the
   prefix through ``link``. Callers decide what to materialize.
@@ -27,11 +33,13 @@ FIXTURES.md A3.
 from __future__ import annotations
 
 from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from multiomics_biocypher_kg_spark.operators.canonicalize import canonical_mapping
 from multiomics_biocypher_kg_spark.operators.enrich import (
@@ -147,14 +155,47 @@ def _walk(
     run: Callable[[Stage, Callable[[], DataFrame]], DataFrame],
     upto: str | None = None,
 ) -> dict[str, DataFrame]:
-    """Feed each stage its upstream frames as ``run`` returned them;
-    ``run(stage, thunk)`` yields the stage's frame from its build."""
+    """Run the stages through ``upto`` (all by default), each as soon
+    as its upstream frames exist, on a driver thread of its own that
+    carries the caller's Spark local properties (job group,
+    description) and job tags. ``run(stage, thunk)`` yields the
+    stage's frame from its build, fed the upstream frames as ``run``
+    returned them. So canonicalize, which has no upstream, runs beside
+    extract -> link, and enrich beside materialize.
+
+    A failed stage fails the stages downstream of it, which never
+    start; every other stage runs to its end, and the walk then raises
+    the first error, with no stage thread left running."""
+    names = [s.name for s in STAGES]
+    todo = list(STAGES[: names.index(upto) + 1] if upto else STAGES)
     frames: dict[str, DataFrame] = {}
-    for stage in STAGES:
-        ups = [frames[u] for u in stage.upstream]
-        frames[stage.name] = run(stage, lambda s=stage, u=ups: s.build(src, *u))
-        if stage.name == upto:
-            break
+    failed: set[str] = set()
+    errors: list[Exception] = []
+    running: dict[Future, Stage] = {}
+    with ThreadPoolExecutor(max_workers=len(todo)) as pool:
+        while todo or running:
+            for stage in list(todo):  # in STAGES order, so upstream first
+                if failed.intersection(stage.upstream):
+                    todo.remove(stage)
+                    failed.add(stage.name)
+                elif frames.keys() >= set(stage.upstream):
+                    todo.remove(stage)
+                    ups = [frames[u] for u in stage.upstream]
+                    # wrapped per stage: each thread gets its own copy of
+                    # the caller's local properties to set its job group on
+                    target = inheritable_thread_target(src.spark)(run)
+                    thunk = lambda s=stage, u=ups: s.build(src, *u)  # noqa: E731
+                    running[pool.submit(target, stage, thunk)] = stage
+            done, _ = wait(running, return_when=FIRST_COMPLETED)
+            for future in done:
+                stage = running.pop(future)
+                try:
+                    frames[stage.name] = future.result()
+                except Exception as e:
+                    errors.append(e)
+                    failed.add(stage.name)
+    if errors:
+        raise errors[0]
     return frames
 
 
@@ -176,7 +217,11 @@ def run_staged(spark: SparkSession, sf_dir: str, workdir: str) -> dict[str, Data
     each stage = one parquet stage table + lineage row, built from its
     upstream stage tables; re-running skips completed stages and
     rebuilds any other, so a crashed half-write converges (see
-    plans.lineage.StagedRunner)."""
+    plans.lineage.StagedRunner). Independent stages run concurrently,
+    each on its own driver thread under the caller's job group (see
+    ``_walk``); if a stage fails, the stages that do not depend on it
+    still finish and are resumed by the next run, and the error is
+    raised once no stage thread is running."""
     from multiomics_biocypher_kg_spark.plans.lineage import StagedRunner
 
     runner = StagedRunner(spark, workdir)

@@ -31,21 +31,33 @@ at web-graph scale. A 90k-edge same-as graph gets 1 partition; a
 10^10-edge crawl graph on a 3000-core cluster gets ~12k partitions —
 both from the same formula, nothing local-mode-specific.
 
-``scoped_shuffle_partitions`` bounds the override to the loop body
-(restores the prior value even on error). Per-round plans are built
-and executed eagerly inside the scope, so no lazy plan escapes with
-the temporary setting. Interleaved A/B at sf1.0 (min of 3, loaded
-box): kg_components 3.10 -> 2.59 s, onto_closure 4.42 -> 4.07 s vs
-the unscoped loops; a pure 1-partition override instead REGRESSED
+The sized count is set on a CHILD session (:func:`state_session`,
+``spark.newSession()``: the same SparkContext, cache and global temp
+views, the caller's SQL settings), never on the caller's session. The
+loop moves its state into the child through a uniquely named global
+temp view (:func:`rerooted`) and hands its result back the same way,
+so the caller's ``spark.sql.shuffle.partitions`` is never changed:
+``run_staged`` plans other stages on other driver threads against
+that session while the connected-components loop of canonicalize
+runs, and a session-wide override would leak the loop's state-sized
+count into their plans. Moving a frame between sessions keeps its
+plan (a join or union across sessions is a plain plan), so the
+min() aggregations keep their map-side partial aggregation, which an
+explicit ``repartition(n, key)`` would lose. Interleaved A/B at sf1.0
+(min of 3, loaded box), with the count scoped to the loop:
+kg_components 3.10 -> 2.59 s, onto_closure 4.42 -> 4.07 s vs the
+unscoped loops; a pure 1-partition override instead REGRESSED
 onto_closure (5.45 s) by serializing the closure self-join — which
 is why the fine target exists.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 #: fine-grained target: rows of iterative state per reduce task.
 ROWS_PER_STATE_PARTITION = 100_000
@@ -64,19 +76,28 @@ def scaled_partitions(spark: SparkSession, n_rows: int) -> int:
     return max(1, min(fine, cap))
 
 
-@contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Run the body with ``spark.sql.shuffle.partitions = n``;
-    restore the previous value afterwards (exception-safe).
+def state_session(spark: SparkSession, n_rows: int) -> SparkSession:
+    """A child session of ``spark`` with the caller's SQL settings and
+    ``spark.sql.shuffle.partitions`` sized for ``n_rows`` of state;
+    set the count again on it as the state grows."""
+    child = spark.newSession()
+    # newSession() starts from the SparkContext's conf: carry over what
+    # the caller set at runtime (ANSI mode, time zone, ...)
+    own = child.conf.getAll
+    for key, value in spark.conf.getAll.items():
+        if own.get(key) != value and spark.conf.isModifiable(key):
+            child.conf.set(key, value)
+    child.conf.set(SHUFFLE_PARTITIONS, str(scaled_partitions(spark, n_rows)))
+    return child
 
-    Assumes one driver thread plans against the session: the setting
-    is session-global, so a query planned concurrently from another
-    thread on the same session would pick up the scoped value. Run
-    concurrent loops on separate sessions (``spark.newSession()``)."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(int(n)))
+
+def rerooted(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df``'s plan as a frame of ``session``, passed through a
+    uniquely named global temp view that is dropped again at once (the
+    returned frame holds the analyzed plan, not the view)."""
+    view = f"reroot_{uuid.uuid4().hex}"
+    df.createGlobalTempView(view)
     try:
-        yield
+        return session.table(f"{session.conf.get('spark.sql.globalTempDatabase')}.{view}")
     finally:
-        spark.conf.set(key, old)
+        df.sparkSession.catalog.dropGlobalTempView(view)

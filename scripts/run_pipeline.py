@@ -20,6 +20,12 @@ Local smoke (same artifact, small corpus):
         scripts/run_pipeline.py \\
         --sf-dir /root/testdata/sf0.001 --workdir /tmp/kg_run
 
+or in-process from the repo root, with no zip (the package is not
+installed, so it is put on the path):
+
+    PYTHONPATH=. python3 scripts/run_pipeline.py --local-master 'local[2]' \\
+        --sf-dir <corpus dir> --workdir /tmp/kg_run
+
 Every stage materializes as an idempotent parquet stage table with a
 lineage row (counts + checksums); re-submitting the SAME command
 resumes: completed stages verify their recorded checksum and are

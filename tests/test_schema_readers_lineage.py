@@ -378,7 +378,10 @@ def test_rebuilt_upstream_invalidates_downstream_stages(spark, tmp_path, monkeyp
         m.setattr(lineage, "write_stage", recording_merge)
         m.setattr(pipeline, "canonical_mapping", no_cc)
         tables = pipeline.run_staged(spark, SF_TINY, workdir)
-        assert rebuilt == ["link", "materialize", "enrich"]
+        # materialize and enrich both wait only on link (canonicalize
+        # resumes), so they may write in either order
+        assert rebuilt[0] == "link"
+        assert sorted(rebuilt[1:]) == ["enrich", "materialize"]
         assert runner.lineage("link")["checksum"] != before["link"]
         assert runner.lineage("materialize")["upstream"] == {
             "link": runner.lineage("link")["checksum"],
@@ -419,6 +422,10 @@ def test_run_stage_faults_converge_to_the_clean_tables(spark, tmp_path, monkeypa
     real_write = lineage.write_stage
 
     def crashing_merge(df, path):
+        # only materialize's write dies: a stage written beside it (enrich
+        # runs concurrently) has no edge_id and writes normally
+        if os.path.basename(os.path.dirname(path)) != "materialize":
+            return real_write(df, path)
         real_write(df.where(F.hash("edge_id") % 2 == 0), path)
         raise RuntimeError("killed mid-commit")
 
@@ -479,8 +486,8 @@ def test_resume_reads_each_stage_table_once(spark, tmp_path):
     """A fully resumed run_staged reads each stage table once, with
     the schema lineage.json records: no schema-inference job and no
     second read, so its only Spark jobs are the checksum recomputes
-    (at most two per stage). Every returned table holds the content
-    lineage.json records."""
+    (one or two per stage, all under the caller's job group). Every
+    returned table holds the content lineage.json records."""
     from multiomics_biocypher_kg_spark.plans import lineage, pipeline
 
     workdir = str(tmp_path)
@@ -495,7 +502,9 @@ def test_resume_reads_each_stage_table_once(spark, tmp_path):
         for k, v in zip(props, saved):
             sc.setLocalProperty(k, v)
     jobs = sc.statusTracker().getJobIdsForGroup("resume-once")
-    assert len(jobs) <= 2 * len(pipeline.STAGES), len(jobs)
+    # at least one recompute per stage: the stage threads run their
+    # jobs under the caller's job group
+    assert len(pipeline.STAGES) <= len(jobs) <= 2 * len(pipeline.STAGES), len(jobs)
     runner = lineage.StagedRunner(spark, workdir)
     for stage in pipeline.STAGES:
         rec = runner.lineage(stage.name)
