@@ -17,9 +17,11 @@ entity_id is NULL and the mention is quarantined, not dropped —
 the histogram (A17) still counts it.
 
 Scale: each lookup table is the grouped-distinct vocab (tiny, <<
-broadcast threshold). The mention stream is never shuffled here —
-the whole stage is map-side. At 10^12 docs this stage is bound by
-scan + codegen only.
+broadcast threshold), aggregated from the gazetteer's JVM-local
+relation (``sources.vocab.vocab_df``, a ``LocalTableScan``), so
+building and broadcasting a lookup starts no Python worker. The
+mention stream is never shuffled here — the whole stage is map-side.
+At 10^12 docs this stage is bound by scan + codegen only.
 """
 
 from __future__ import annotations

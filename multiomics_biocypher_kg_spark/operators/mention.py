@@ -7,7 +7,10 @@ Two matchers, mirroring the reference's candidate generation
 1. ``mentions_tokens`` — the hot path. Pure native Column
    expressions: split -> posexplode -> broadcast semi-join against
    the (tiny) distinct lowercase surface set. Whole-stage codegen,
-   no Python. This is what runs over 10^12 documents.
+   no Python: the surface set is aggregated from the gazetteer's
+   JVM-local relation (``sources.vocab.vocab_df``), so its broadcast
+   starts no Python worker either. This is what runs over 10^12
+   documents.
 
 2. ``mentions_phrases`` — multi-token surfaces (e.g. "hash join")
    via an Aho-Corasick automaton built driver-side from the vocab

@@ -34,6 +34,7 @@ source of truth.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -78,9 +79,21 @@ VOCAB_SCHEMA = T.StructType(
 
 
 def vocab_df(spark: SparkSession, extra_rows: list[tuple] | None = None) -> DataFrame:
-    """The gazetteer as a (broadcastable) DataFrame."""
+    """The gazetteer as a (broadcastable) JVM-local relation.
+
+    The rows go to the JVM once, as an Arrow table, and plan as a
+    ``LocalTableScan``, so every lookup built from them (mention's
+    surface set, link's ``both`` and ``t1ci``) is scanned and
+    broadcast inside the JVM. ``createDataFrame`` over a Python list
+    would be a Python RDD (``Scan ExistingRDD``): every plan that
+    probes it re-reads the rows through Python worker processes, once
+    per build and once per ingest micro-batch. Above
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark keeps
+    the Arrow batches as a JVM-side RDD, still not a Python one.
+    """
     rows = VOCAB_ROWS + list(extra_rows or [])
-    return spark.createDataFrame(rows, VOCAB_SCHEMA)
+    table = pa.table(dict(zip(VOCAB_SCHEMA.names, zip(*rows, strict=True))))
+    return spark.createDataFrame(table, VOCAB_SCHEMA)
 
 
 def vocab_values_sql() -> str:

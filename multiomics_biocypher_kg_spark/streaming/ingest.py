@@ -45,6 +45,8 @@ def run_streaming_triples(
     docs = spark.readStream.schema(DOCS_SCHEMA).parquet(docs_dir)
     src = Sources(spark, pages=pages_from_documents_df(docs))
     links = compose(src, upto="link")["link"]
+    # the sink's schema, so the final read runs no inference job
+    schema = with_edge_id(triples_from_links(links, subj_col="url")).schema
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         triples = with_edge_id(triples_from_links(batch_df, subj_col="url"))
@@ -57,4 +59,4 @@ def run_streaming_triples(
         .start()
         .awaitTermination()
     )
-    return spark.read.parquet(target_path)
+    return spark.read.schema(schema).parquet(target_path)

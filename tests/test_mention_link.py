@@ -11,7 +11,7 @@ from multiomics_biocypher_kg_spark.operators.mention import (
     mentions_tokens,
 )
 from multiomics_biocypher_kg_spark.sources.pages import pages_from_documents
-from multiomics_biocypher_kg_spark.sources.vocab import vocab_df
+from multiomics_biocypher_kg_spark.sources.vocab import VOCAB_ROWS, VOCAB_SCHEMA, vocab_df
 from tests.conftest import SF_TINY
 
 
@@ -22,6 +22,19 @@ def _links_for(spark, texts: list[str], extra_vocab=None):
     )
     vocab = vocab_df(spark, extra_rows=extra_vocab)
     return link(mentions_tokens(docs, vocab), vocab)
+
+
+def test_vocab_df_rows_and_schema(spark):
+    """The JVM-local gazetteer holds exactly the literal rows (plus
+    any extra rows, in order) under ``VOCAB_SCHEMA``, non-nullable
+    fields included."""
+    extra = [("Zeta", "gene_name", 2, "ncbigene:Z1", "gene")]
+    for extra_rows, want in ((None, VOCAB_ROWS), (extra, VOCAB_ROWS + extra)):
+        df = vocab_df(spark, extra_rows=extra_rows)
+        # select("*") asks the JVM plan for the schema, not the
+        # Python-side copy the frame was built with
+        assert df.schema == df.select("*").schema == VOCAB_SCHEMA
+        assert [tuple(r) for r in df.collect()] == want
 
 
 def test_cascade_every_method(spark):

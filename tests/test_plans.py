@@ -5,6 +5,11 @@ show up at 100x scale."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 from pyspark.sql import functions as F
 
 from multiomics_biocypher_kg_spark.operators.extract import extract, html_to_text
@@ -26,6 +31,70 @@ def test_link_path_is_all_broadcast_no_sort_merge(spark):
     plan = _plan(links)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan, "mention stream must never shuffle-join"
+    # the lookups scan the gazetteer in the JVM; this path has no
+    # checkpoint, so an ExistingRDD here is a Python RDD scan
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
+_NO_PYTHON_WORKER_SCRIPT = r"""
+import glob, json, os, shutil, sys
+from multiomics_biocypher_kg_spark.plans.pipeline import run_staged
+from multiomics_biocypher_kg_spark.session import build_session
+from multiomics_biocypher_kg_spark.streaming.ingest import run_streaming_triples
+
+sf_dir, workdir = sys.argv[1], sys.argv[2]
+spark = build_session(master="local[2]", shuffle_partitions=2)
+run_staged(spark, sf_dir, os.path.join(workdir, "staged"))
+docs = os.path.join(workdir, "incoming")
+os.makedirs(docs)
+shutil.copy(os.path.join(sf_dir, "documents.parquet"), docs)
+triples = run_streaming_triples(
+    spark, docs, os.path.join(workdir, "triples"), os.path.join(workdir, "ckpt")
+).count()
+
+
+def cmdline(pid):
+    try:
+        with open(f"/proc/{pid}/cmdline") as f:
+            return f.read().replace("\0", " ").strip()
+    except OSError:
+        return "(exited)"
+
+
+jvm = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+paths = glob.glob(f"/proc/{jvm}/task/*/children")
+if not paths:
+    sys.exit(f"no /proc/{jvm}/task/*/children to read")
+children = []
+for path in paths:
+    with open(path) as f:
+        children += f.read().split()
+print(json.dumps({"triples": triples, "children": {c: cmdline(c) for c in children}}))
+spark.stop()
+"""
+
+
+def test_kg_construction_starts_no_python_worker(tmp_path):
+    """A full ``run_staged`` and one streaming ingest run entirely in
+    the JVM: afterwards the JVM has no child process, so no Python
+    worker (``pyspark.daemon``) was ever started. Fresh ``local[2]``
+    session in a subprocess; the daemon, once started, lives as long
+    as the session."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYSPARK_PYTHON=sys.executable, SPARK_GRAFT_DRIVER_MEM="1g")
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [repo, env.get("PYTHONPATH")]))
+    out = subprocess.run(
+        [sys.executable, "-c", _NO_PYTHON_WORKER_SCRIPT, SF_TINY, str(tmp_path)],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        env=env,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["triples"] > 0
+    assert got["children"] == {}
 
 
 def test_scan_filter_pushdown_and_column_pruning(spark):
